@@ -293,8 +293,8 @@ object Bench {
     results("q_sorted_early") = timeMedian(trials) {
       sortedSe.searchSortedEarly(TermQ("data"), 10).collect()
     }
-    // fully distributed sorted-merge remap (permutation-as-table path,
-    // forced below its size cutover): 8 sorted segments -> 1
+    // sorted merge (segment rewrite, permutation-as-table): 8 sorted
+    // segments -> 1
     results("sorted_merge_dist") = median((1 to trials).map { _ =>
       // fresh copy of the pristine sorted index per trial (merge mutates
       // the commit log); the copy is setup, only the merge is timed
@@ -306,8 +306,7 @@ object Bench {
       time {
         graft.merge.MergeJob.mergeToPolicy(spark, p,
           new graft.merge.TieredMergePolicy(segsPerTier = 1.0, maxMergeAtOnce = 8,
-            floorSegmentDocs = 1000),
-          sortedPermBroadcastMax = 0)
+            floorSegmentDocs = 1000))
       }
     })
     results("percolate") = timeMedian(trials) {

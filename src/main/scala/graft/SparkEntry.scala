@@ -133,10 +133,9 @@ object IndexCache {
   private val sortCache = scala.collection.concurrent.TrieMap.empty[String, Searcher]
 
   /** Sorted-MERGE gate fixture: the 4-segment index-sorted index merged to
-    * one segment through the DISTRIBUTED sorted-merge path (broadcast
-    * budget forced to 0, so the permutation is a table, postings take the
-    * salted (field, term, salt) shuffle, and pieces stay bounded —
-    * merge/MergeJob.scala mergeSortedDistributed). A correct re-sorting
+    * one segment through the sorted merge's segment rewrite (the permutation
+    * is a table, postings take the salted (field, term, salt) shuffle, and
+    * pieces stay bounded — merge/SegmentRewrite.scala). A correct re-sorting
     * merge (SortingMergePolicy semantics) must leave every sorted-collector
     * result exactly as the unmerged index produced it.
     */
@@ -153,7 +152,7 @@ object IndexCache {
       }
       if (IndexBuilder.statsGen(spark, path) == 0) { // merge not committed yet
         val segs = IndexBuilder.completedSegments(spark, path).toList.sorted
-        graft.merge.MergeJob.merge(spark, path, segs, sortedPermBroadcastMax = 0)
+        graft.merge.MergeJob.merge(spark, path, segs)
       }
       new Searcher(spark, path, mode = ExactDouble)
     })

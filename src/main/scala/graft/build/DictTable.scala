@@ -109,19 +109,13 @@ object DictTable {
     // independent writes run concurrently (the pinned blocks materialize
     // once under the block manager's per-partition locking)
     val pinned = dict.persist()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val dictJob = Future {
-      pinned.write.mode(SaveMode.Overwrite).parquet(dictPath(indexPath))
-      spark.catalog.refreshByPath(dictPath(indexPath))
-    }
-    val gramsJob = Future {
-      writeGramsFrom(spark, indexPath, pinned, termBound <= singleFileMax / 8)
-    }
-    Await.result(dictJob, Duration.Inf)
-    Await.result(gramsJob, Duration.Inf)
-    pinned.unpersist()
+    try ConcurrentWrites(spark, Seq(
+      () => {
+        pinned.write.mode(SaveMode.Overwrite).parquet(dictPath(indexPath))
+        spark.catalog.refreshByPath(dictPath(indexPath))
+      },
+      () => writeGramsFrom(spark, indexPath, pinned, termBound <= singleFileMax / 8)))
+    finally pinned.unpersist()
     writeMarker(spark, indexPath, sig)
   }
 

@@ -68,9 +68,10 @@ object IndexBuilder {
         * analog): name of a NUMERIC column on the pages input; each segment
         * assigns docIds in (column ASC, url ASC) order and stores the key in
         * the doc store, enabling early-terminating sorted collection
-        * (Searcher.searchSortedEarly). Merges RE-SORT via a budget-bounded
-        * permutation (MergeJob.SortedMergeMaxDocs), the SortingMergePolicy
-        * analog. */
+        * (Searcher.searchSortedEarly). Merges RE-SORT: a sorted merge is a
+        * rewrite of the live docs into one segment under their (key, url)
+        * permutation (MergeJob's SegmentRewrite, shared with splitIndex) —
+        * the SortingMergePolicy analog. */
       indexSort: Option[String] = None,
       /** Per-segment term bloom filters (BloomFilteringPostingsFormat
         * analog, Lucene.Net.Codecs/Bloom/): opt-in, advisory rows under
@@ -176,6 +177,48 @@ object IndexBuilder {
         s"commit conflict: generation $gen already published as " +
           s"${store.resolve(gen).getOrElse("?")} (attempted $dirName) — " +
           "a concurrent writer won this slot; re-plan against the new head")
+  }
+
+  /** Opt-in per-(segment, field) term blooms (BloomFilteringPostingsFormat
+    * analog) of `postings` rows: one streaming pass over the term rows; the
+    * bitset folds to the FuzzySet target saturation before it is stored. */
+  private[graft] def writeBlooms(postings: DataFrame, indexPath: String, mode: SaveMode): Unit = {
+    val spark = postings.sparkSession
+    import spark.implicits._
+    postings
+      .select(col("segmentId").cast("int").as("segmentId"), col("field"), col("term"))
+      .as[(Int, String, String)]
+      .groupByKey(r => (r._1, r._2))
+      .mapGroups { (key: (Int, String), rows: Iterator[(Int, String, String)]) =>
+        val (mask, bits) = graft.codec.TermBloom.build(
+          rows.map(r => graft.codec.TermBloom.hash(r._3)))
+        graft.codec.BloomRow(key._1, key._2, mask, bits)
+      }
+      .write.mode(mode).parquet(bloomsPath(indexPath))
+  }
+
+  /** Per-segment, per-field stats (CollectionStatistics analog,
+    * Search/CollectionStatistics.cs:32-37) from `segDocs` (segmentId,
+    * maxDoc, defaultSttf) and the segments' `postings` rows: maxDoc is
+    * segment-wide; the default field's sumTotalTermFreq comes from
+    * docs.fieldLen (unchanged legacy semantics), extra fields' from their
+    * postings' ttf sums. */
+  private[graft] def segmentStats(segDocs: DataFrame, postings: DataFrame,
+                                  fieldNames: Seq[String]): Array[SegmentStats] = {
+    val spark = segDocs.sparkSession
+    import spark.implicits._
+    val segFieldTerms = postings
+      .groupBy(col("segmentId"), col("field"))
+      .agg(count(lit(1)).as("sumDocFreq"), sum(col("ttf")).as("postSttf"))
+    segDocs.crossJoin(fieldNames.toDF("field"))
+      .join(segFieldTerms, Seq("segmentId", "field"), "left")
+      .select(col("segmentId").cast("int").as("segmentId"), col("field"),
+        col("maxDoc").cast("long").as("maxDoc"),
+        when(col("field") === DefaultField, col("defaultSttf"))
+          .otherwise(coalesce(col("postSttf"), lit(0L)))
+          .cast("long").as("sumTotalTermFreq"),
+        coalesce(col("sumDocFreq"), lit(0L)).cast("long").as("sumDocFreq"))
+      .as[SegmentStats].collect()
   }
 
   /** Resolved path of the CURRENT stats generation. */
@@ -297,14 +340,10 @@ object IndexBuilder {
     // postings and docs jobs share the pages shuffle and are independent:
     // submit both concurrently (the scheduler interleaves their stages),
     // halving the serial per-job overhead
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val postingsJob = Future {
+    def postingsJob(): Unit =
       postings.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("segmentId").parquet(postingsPath(indexPath))
-    }
 
     // docs (+ norms column - the DocValues/.nvd analog): a second cheap pass
     // that reuses the repartition's shuffle files; tokenization-for-length
@@ -323,7 +362,7 @@ object IndexBuilder {
         (DocRow(seg, docId, url, len, bm25.encodeNormValue(boost, len)), key)
       }
     }
-    val docsJob = Future {
+    def docsJob(): Unit = {
       // sorted indexes persist the key as a docs column (the .nvd-like
       // per-doc numeric the sorted collector merges on); unsorted indexes
       // keep the legacy schema
@@ -340,7 +379,7 @@ object IndexBuilder {
 
     // term vectors (opt-in): doc-major (term, tf, positions, offsets) — a
     // third concurrent pass over the same shuffle, same docId assignment
-    val vectorsJob = if (!termVectors) Future.successful(()) else Future {
+    def vectorsJob(): Unit = {
       val vecDf = sortedPages.mapPartitions { rows =>
         val fields = fieldSpecs.map { case (n, a) => n -> Analyzers.byName(a) }
         var curSeg = -1
@@ -355,50 +394,20 @@ object IndexBuilder {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("segmentId").parquet(TermVectors.vectorsPath(indexPath))
     }
-    Await.result(postingsJob, Duration.Inf)
-    Await.result(docsJob, Duration.Inf)
-    Await.result(vectorsJob, Duration.Inf)
-    sortedPages.unpersist()
+    try ConcurrentWrites(spark,
+      Seq(postingsJob _, docsJob _) ++ (if (termVectors) Seq(vectorsJob _) else Nil))
+    finally sortedPages.unpersist()
 
-    // opt-in per-(segment, field) term blooms (BloomFilteringPostingsFormat
-    // analog): one streaming pass over each group's term rows; the bitset
-    // folds to the FuzzySet target saturation before it is stored.
-    if (bloomFilter) {
-      spark.read.parquet(postingsPath(indexPath))
-        .filter(col("segmentId").isInCollection(group))
-        .select(col("segmentId").cast("int").as("segmentId"), col("field"), col("term"))
-        .as[(Int, String, String)]
-        .groupByKey(r => (r._1, r._2))
-        .mapGroups { (key: (Int, String), rows: Iterator[(Int, String, String)]) =>
-          val (mask, bits) = graft.codec.TermBloom.build(
-            rows.map(r => graft.codec.TermBloom.hash(r._3)))
-          graft.codec.BloomRow(key._1, key._2, mask, bits)
-        }
-        .write.mode(SaveMode.Append).parquet(bloomsPath(indexPath))
-    }
+    // opt-in term blooms, then per-segment, per-field stats of the group
+    val groupPostings = spark.read.parquet(postingsPath(indexPath))
+      .filter(col("segmentId").isInCollection(group))
+    if (bloomFilter) writeBlooms(groupPostings, indexPath, SaveMode.Append)
 
-    // per-segment, per-field stats (CollectionStatistics analog,
-    // Search/CollectionStatistics.cs:32-37): maxDoc is segment-wide; the
-    // default field's sumTotalTermFreq comes from docs.fieldLen (unchanged
-    // legacy semantics), extra fields' from their postings' ttf sums.
     val segDocs = spark.read.parquet(docsPath(indexPath))
       .filter(col("segmentId").isInCollection(group))
       .groupBy(col("segmentId"))
       .agg(count(lit(1)).as("maxDoc"), sum(col("fieldLen")).as("defaultSttf"))
-    val segFieldTerms = spark.read.parquet(postingsPath(indexPath))
-      .filter(col("segmentId").isInCollection(group))
-      .groupBy(col("segmentId"), col("field"))
-      .agg(count(lit(1)).as("sumDocFreq"), sum(col("ttf")).as("postSttf"))
-    val fieldsDf = fieldNames.toDF("field")
-    val stats = segDocs.crossJoin(fieldsDf)
-      .join(segFieldTerms, Seq("segmentId", "field"), "left")
-      .select(col("segmentId").cast("int").as("segmentId"), col("field"),
-        col("maxDoc").cast("long").as("maxDoc"),
-        when(col("field") === DefaultField, col("defaultSttf"))
-          .otherwise(coalesce(col("postSttf"), lit(0L)))
-          .cast("long").as("sumTotalTermFreq"),
-        coalesce(col("sumDocFreq"), lit(0L)).cast("long").as("sumDocFreq"))
-      .as[SegmentStats].collect()
+    val stats = segmentStats(segDocs, groupPostings, fieldNames)
 
     val numDocs = stats.filter(_.field == DefaultField).map(_.maxDoc).sum
 

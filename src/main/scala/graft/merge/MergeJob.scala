@@ -12,7 +12,7 @@ import graft.model._
   * concatenate doc stores with docID rebasing; k-way sort-merge of postings
   * summing df/ttf; remap via MergeDocIDRemapper).
   *
-  * Spark shape, sized for 100 TB:
+  * Spark shape of an UNSORTED merge, sized for 100 TB:
   *  1. map-side REBASE (narrow, fully parallel): every source posting row is
   *     re-encoded with docIds + docBase — no shuffle, no giant lists;
   *  2. term shuffle of the *encoded, compressed* pieces only (orders of
@@ -22,6 +22,9 @@ import graft.model._
   *     the query path handles split posting rows transparently, so no single
   *     reducer ever materializes a stopword-scale posting list. This is the
   *     salted-hot-term handling of SURVEY.md §7.3 realized structurally.
+  * An index-SORTED merge must re-sort (SortingMergePolicy.cs): it is a
+  * [[SegmentRewrite]] into the one target segment — a split into a single
+  * destination; [[splitIndex]] is the same primitive with hash routing.
   *
   * Commit protocol (the segments_N two-phase-commit analog): the merged
   * segment gets a FRESH id, staged data renames in while readers still see
@@ -44,40 +47,25 @@ object MergeJob {
                             skips: Array[SkipRow], payloads: Array[Byte],
                             offsets: Array[Byte])
 
+  /** Max posting entries per encoded piece row of a [[SegmentRewrite]]
+    * (sorted merge, split): a stopword-scale term becomes many rows with
+    * disjoint increasing docId ranges (the query path already serves split
+    * rows) instead of one reducer-sized buffer. */
+  val SortedMergePieceEntries: Int = 1 << 20
+
   /** Merge `sources` into a FRESH segment id (max live id + 1) — fully
     * disjoint from every source, so staged data renames IN before anything
     * is deleted. Visibility is gated on the stats-generation flip (one
     * atomic directory rename covering docs+postings+stats — the segments_N
     * analog); source-dir deletion afterwards is mere cleanup that readers
-    * can no longer observe. Returns the new segment id.
+    * can no longer observe. `hotTermDf` applies to the unsorted concat,
+    * `sortedPieceEntries` to the sorted rewrite. Returns the new segment id.
     */
-  /** Broadcast budget for SORTED merges: up to this many source docs the
-    * (sortKey, url)-ordered docId permutation is collected to the driver and
-    * broadcast as per-segment arrays (like the reference's Sorter, which
-    * builds the full old->new docId map in RAM —
-    * Lucene.Net.Misc/Index/Sorter/Sorter.cs; ~4M docs ≈ 16 MB of ints).
-    * Above it the merge switches to the fully distributed remap: the
-    * permutation becomes a TABLE (two-pass rank, no driver collect), the doc
-    * store/vectors rebase by join, and postings rebuild via explode → join →
-    * (field, term) shuffle → streaming re-encode with bounded piece rows —
-    * no single buffer anywhere scales with the merge size. */
-  val SortedMergeMaxDocs: Int = 1 << 22
-
-  /** Max posting entries per encoded piece row on the distributed sorted
-    * path: a stopword-scale term becomes many rows with disjoint increasing
-    * docId ranges (the query path already serves split rows) instead of one
-    * reducer-sized buffer. */
-  val SortedMergePieceEntries: Int = 1 << 20
-
   def merge(spark: SparkSession, indexPath: String, sources: List[Int],
             hotTermDf: Int = 5000000,
-            sortedPermBroadcastMax: Int = SortedMergeMaxDocs,
             sortedPieceEntries: Int = SortedMergePieceEntries): Int = {
     import spark.implicits._
     require(sources.size >= 2)
-    // index-sorted index: the merge must RE-SORT (SortingMergePolicy.cs) —
-    // docIds of the merged segment are assigned in (sortKey, url) order via
-    // a driver-built permutation, budget-bounded by SortedMergeMaxDocs
     val sortedMerge: Boolean =
       (try IndexBuilder.readConfig(spark, indexPath).indexSort
        catch { case _: Exception => None }).isDefined
@@ -100,17 +88,13 @@ object MergeJob {
     val mergeBand = statsAll.map(_.segmentId).filter(_ >= IndexBuilder.MergeIdOffset)
     val target =
       if (mergeBand.isEmpty) IndexBuilder.MergeIdOffset else mergeBand.max + 1
+    if (sortedMerge)
+      return mergeSorted(spark, indexPath, srcSorted, target, statsAll,
+        dictWasValid, sortedPieceEntries)
+
     // segment-wide maxDoc from the default field's rows (present per segment)
     val stats = statsAll.filter(_.field == IndexBuilder.DefaultField)
       .map(s => s.segmentId -> s).toMap
-
-    // sorted merges above the broadcast budget take the fully distributed
-    // remap path — gated on source maxDoc (bounds BOTH the driver collect
-    // and the per-segment permutation arrays, independent of delete volume)
-    val totalMaxDoc: Long = srcSorted.map(s => stats(s).maxDoc).sum
-    if (sortedMerge && totalMaxDoc > sortedPermBroadcastMax)
-      return mergeSortedDistributed(spark, indexPath, srcSorted, target,
-        statsAll, dictWasValid, sortedPieceEntries)
 
     // deleted docs of the source segments are PURGED here (docIds compact,
     // stats recomputed) — Lucene's merge applies live docs and remaps via
@@ -130,70 +114,30 @@ object MergeJob {
     val basesB = spark.sparkContext.broadcast(bases)
     val deletedB = spark.sparkContext.broadcast(deleted)
 
-    // live docId -> merged docId; -1 for deleted.
-    //  - unsorted: compaction by segment base (append order, narrow math)
-    //  - sorted: the Sorter.cs permutation — live docs ordered globally by
-    //    (sortKey, url), ids assigned by rank, broadcast as per-seg arrays
-    val remapFn: (Int, Int) => Int =
-      if (!sortedMerge) (seg: Int, docId: Int) => {
-        val del = deletedB.value.getOrElse(seg, Array.empty[Int])
-        if (del.isEmpty) basesB.value(seg) + docId
-        else {
-          val idx = java.util.Arrays.binarySearch(del, docId)
-          if (idx >= 0) -1
-          else basesB.value(seg) + docId - (-idx - 1) // minus #deleted below
-        }
-      } else {
-        val ordered: Array[(Int, Int)] = spark.read
-          .parquet(IndexBuilder.docsPath(indexPath))
-          .filter(col("segmentId").isInCollection(srcSorted))
-          .select(col("segmentId"), col("docId"), col("sortKey"), col("url"))
-          .orderBy(col("sortKey").asc, col("url").asc)
-          .as[(Int, Int, Double, String)]
-          .map(r => (r._1, r._2))
-          .collect()
-        // <= totalMaxDoc <= sortedPermBroadcastMax by the gate above
-        val perm: Map[Int, Array[Int]] =
-          srcSorted.map(s => s -> Array.fill(stats(s).maxDoc.toInt)(-1)).toMap
-        var rank = 0
-        ordered.foreach { case (s, d) =>
-          if (deleted.get(s).forall(del => java.util.Arrays.binarySearch(del, d) < 0)) {
-            perm(s)(d) = rank
-            rank += 1
-          }
-        }
-        val permB = spark.sparkContext.broadcast(perm)
-        (seg: Int, docId: Int) => permB.value(seg)(docId)
+    // live docId -> merged docId (-1 for deleted): compaction by segment
+    // base (append order, narrow math)
+    val remapFn: (Int, Int) => Int = (seg: Int, docId: Int) => {
+      val del = deletedB.value.getOrElse(seg, Array.empty[Int])
+      if (del.isEmpty) basesB.value(seg) + docId
+      else {
+        val idx = java.util.Arrays.binarySearch(del, docId)
+        if (idx >= 0) -1
+        else basesB.value(seg) + docId - (-idx - 1) // minus #deleted below
       }
+    }
 
     val staging = s"$indexPath/.staging/merge_$target"
 
-    // ---- docs: narrow rebase of the doc store (MergeDocIDRemapper analog);
-    // sorted indexes carry the sortKey column through so the merged segment
-    // stays early-termination-servable
-    if (!sortedMerge) {
-      spark.read.parquet(IndexBuilder.docsPath(indexPath))
-        .filter(col("segmentId").isInCollection(srcSorted))
-        .as[DocRow]
-        .flatMap { d =>
-          val nid = remapFn(d.segmentId, d.docId)
-          if (nid < 0) None else Some((nid, d.url, d.fieldLen, d.normByte))
-        }
-        .toDF("docId", "url", "fieldLen", "normByte")
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/docs")
-    } else {
-      spark.read.parquet(IndexBuilder.docsPath(indexPath))
-        .filter(col("segmentId").isInCollection(srcSorted))
-        .select(col("segmentId"), col("docId"), col("url"),
-          col("fieldLen"), col("normByte"), col("sortKey"))
-        .as[(Int, Int, String, Int, Byte, Double)]
-        .flatMap { case (seg, d, url, len, nb, key) =>
-          val nid = remapFn(seg, d)
-          if (nid < 0) None else Some((nid, url, len, nb, key))
-        }
-        .toDF("docId", "url", "fieldLen", "normByte", "sortKey")
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/docs")
-    }
+    // ---- docs: narrow rebase of the doc store (MergeDocIDRemapper analog)
+    spark.read.parquet(IndexBuilder.docsPath(indexPath))
+      .filter(col("segmentId").isInCollection(srcSorted))
+      .as[DocRow]
+      .flatMap { d =>
+        val nid = remapFn(d.segmentId, d.docId)
+        if (nid < 0) None else Some((nid, d.url, d.fieldLen, d.normByte))
+      }
+      .toDF("docId", "url", "fieldLen", "normByte")
+      .write.mode(SaveMode.Overwrite).parquet(s"$staging/docs")
 
     // ---- term vectors (when present): same narrow rebase as the doc store
     // — purged docs drop, surviving docIds compact (Lucene40TermVectorsWriter
@@ -234,13 +178,11 @@ object MergeJob {
     // sort key includes firstDoc: a source segment may hold several pieces
     // per key (builder RAM flushes / prior merges share one segmentId), and
     // stitching must follow docId order, not source order alone
-    val sortedMergeFlag = sortedMerge // plain boolean for the task closure
     val merged: Dataset[PostingRow] = pieces
       .repartition(col("field"), col("term"))
       .sortWithinPartitions(col("field"), col("term"), col("firstDoc"))
       .mapPartitions { rows =>
         val hot = hotTermDf
-        val isSorted = sortedMergeFlag
         new Iterator[PostingRow] {
           private var pending: PieceRow = if (rows.hasNext) rows.next() else null
           private val out = scala.collection.mutable.Queue.empty[PostingRow]
@@ -254,10 +196,7 @@ object MergeJob {
                 pending = if (rows.hasNext) rows.next() else null
               }
               val totalDf = group.map(_.df.toLong).sum
-              // a SORTED merge's pieces interleave in the new docId space
-              // (the permutation shuffles ranks across sources), so the
-              // disjoint-range hot-term shortcut is only sound unsorted
-              if (group.size == 1 || (!isSorted && totalDf > hot)) {
+              if (group.size == 1 || totalDf > hot) {
                 // hot term (or single piece): pieces stay separate rows with
                 // disjoint (or piece-internal sorted) docId ranges
                 group.foreach { g =>
@@ -265,8 +204,8 @@ object MergeJob {
                     g.positions, g.lens, g.skips, g.payloads, g.offsets)
                 }
               } else {
-                // gather every surviving entry, restore global docId order
-                // if pieces interleave, then encode one stitched row
+                // gather every surviving entry (pieces arrive in firstDoc
+                // order with disjoint ranges), then encode one stitched row
                 val entries = scala.collection.mutable.ArrayBuffer
                   .empty[(Int, Int, Array[Int], Int, Array[Array[Byte]], Array[Int])]
                 group.foreach { g =>
@@ -285,9 +224,8 @@ object MergeJob {
                     i += 1
                   }
                 }
-                val orderedEntries = if (isSorted) entries.sortBy(_._1) else entries
                 val enc = new PostingsCodec.Encoder
-                orderedEntries.foreach { case (id, tf, ps, len, pl, of) =>
+                entries.foreach { case (id, tf, ps, len, pl, of) =>
                   enc.add(id, tf, ps, len, pl, of)
                 }
                 val e = enc.finish()
@@ -307,7 +245,7 @@ object MergeJob {
 
     // ---- bring the staged merged data in under the FRESH id: nothing is
     // deleted yet, and readers ignore it (not in the committed stats)
-    renameStaged(spark, indexPath, staging, target, hasVectors)
+    renameStaged(spark, indexPath, staging, "", target, hasVectors)
 
     // deletes that raced in against the source segments AFTER the snapshot
     // above survived the merge un-purged; remap their markers to the merged
@@ -329,13 +267,17 @@ object MergeJob {
     target
   }
 
-  /** Rename the staged merged data in under the target segment id (readers
-    * still ignore it — not in the committed stats generation). */
+  /** Rename the staged merged data (`<staging>/<table><part>`) in under the
+    * target segment id (readers still ignore it — not in the committed stats
+    * generation). */
   private def renameStaged(spark: SparkSession, indexPath: String,
-                           staging: String, target: Int, hasVectors: Boolean): Unit = {
+                           staging: String, part: String, target: Int,
+                           hasVectors: Boolean): Unit = {
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     def renameIn(base: String, staged: String): Unit = {
       val fs = new Path(base).getFileSystem(hadoopConf)
+      // a partitioned rewrite that kept no live doc wrote no partition dir
+      if (!fs.exists(new Path(staged))) return
       val dst = new Path(s"$base/segmentId=$target")
       // a retry after a crash between the data renames and the stats flip
       // recomputes the SAME target: clear the (invisible) orphan first so
@@ -345,10 +287,10 @@ object MergeJob {
       val ok = fs.rename(new Path(staged), dst)
       require(ok, s"rename $staged -> $dst failed")
     }
-    renameIn(IndexBuilder.docsPath(indexPath), s"$staging/docs")
-    renameIn(IndexBuilder.postingsPath(indexPath), s"$staging/postings")
+    renameIn(IndexBuilder.docsPath(indexPath), s"$staging/docs$part")
+    renameIn(IndexBuilder.postingsPath(indexPath), s"$staging/postings$part")
     if (hasVectors)
-      renameIn(graft.build.TermVectors.vectorsPath(indexPath), s"$staging/vectors")
+      renameIn(graft.build.TermVectors.vectorsPath(indexPath), s"$staging/vectors$part")
     // fs-level renames bypass DataFrameWriter's automatic cache refresh:
     // evict stale file listings for the swapped paths
     spark.catalog.refreshByPath(IndexBuilder.docsPath(indexPath))
@@ -467,35 +409,13 @@ object MergeJob {
     }
   }
 
-  /** One exploded posting entry on the distributed sorted-merge path.
-    * `payload` is the entry's positions' framed payload bytes (VByte(len) +
-    * bytes per position; null when the source list carries no payloads). */
-  final case class SortedEntryRow(field: String, term: String, segmentId: Int,
-                                  docId: Int, tf: Int, positions: Array[Int],
-                                  fieldLen: Int, payload: Array[Byte],
-                                  /** Flat [s0,e0,...] character offsets for
-                                    * the entry's tf positions (null when the
-                                    * index carries no offset stream). */
-                                  offsets: Array[Int])
-
-  /** Fully distributed sorted merge — the scale path above
-    * [[SortedMergeMaxDocs]]. The Sorter.cs permutation becomes a TABLE built
-    * with the two-pass distributed rank (no driver collect, no per-segment
-    * arrays); the doc store and term vectors rebase by join; postings
-    * rebuild via explode → permutation join → (field, term) shuffle →
-    * streaming re-encode that emits a piece row every
-    * [[SortedMergePieceEntries]] entries. Nothing on this path buffers more
-    * than one encoded piece per task, so a 10^9-doc sorted merge is bounded
-    * by cluster disk, not driver or reducer RAM. Costs two extra shuffles
-    * over the posting ENTRIES (vs the compressed-piece shuffle of the
-    * unsorted path) — inherent: a sorted merge is a global reorder, i.e. a
-    * rebuild of the merged segment in permuted order.
-    */
-  private def mergeSortedDistributed(spark: SparkSession, indexPath: String,
-                                     srcSorted: List[Int], target: Int,
-                                     statsAll: Array[SegmentStats],
-                                     dictWasValid: Boolean,
-                                     pieceEntries: Int): Int = {
+  /** Sorted merge: a [[SegmentRewrite]] of the sources' live docs into the
+    * one target segment, (sortKey, url)-ordered, staged and then committed
+    * exactly like the concat path. */
+  private def mergeSorted(spark: SparkSession, indexPath: String,
+                          srcSorted: List[Int], target: Int,
+                          statsAll: Array[SegmentStats],
+                          dictWasValid: Boolean, pieceEntries: Int): Int = {
     import spark.implicits._
     val staging = s"$indexPath/.staging/merge_$target"
 
@@ -511,136 +431,14 @@ object MergeJob {
         .localCheckpoint(true)
     val anyPurged = hasDeletes && !appliedDf.isEmpty
 
-    val docsSrc = spark.read.parquet(IndexBuilder.docsPath(indexPath))
+    val routed = spark.read.parquet(IndexBuilder.docsPath(indexPath))
       .filter(col("segmentId").isInCollection(srcSorted))
-
-    // ---- ONE global (sortKey, url) rank with the doc-store payload riding
-    // along: appendRank pins the sorted live rows, so the permutation, the
-    // merged doc store and the merged doc stats are narrow derivations of a
-    // single sort — the old shape wrote the permutation to a staging parquet,
-    // read it back, and joined the doc store against it
-    val ranked = graft.Ranks.appendRank(
-        docsSrc.select("segmentId", "docId", "sortKey", "url", "fieldLen", "normByte")
-          .join(appliedDf, Seq("segmentId", "docId"), "left_anti"),
-        "rank", Seq(col("sortKey").asc, col("url").asc))
-      .withColumn("newId", (col("rank") - 1).cast("int"))
-    val permDf = ranked.select("segmentId", "docId", "newId")
-
-    // merged doc-store stats off the pinned sort (commitMerged then skips
-    // its re-read of the written doc store)
-    val docAgg = ranked.agg(count(lit(1)), coalesce(sum("fieldLen"), lit(0L)))
-      .as[(Long, Long)].first()
-
-    // ---- doc store, term vectors and postings are independent given the
-    // pinned sort: submit concurrently
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val docsJob = Future {
-      ranked
-        .select(col("newId").as("docId"), col("url"), col("fieldLen"),
-          col("normByte"), col("sortKey"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/docs")
-    }
-
-    // ---- term vectors (when present): join-rebase through the permutation
+      .join(appliedDf, Seq("segmentId", "docId"), "left_anti")
+      .withColumn("newSeg", lit(target))
     val hasVectors = graft.build.TermVectors.enabled(spark, indexPath)
-    val vectorsJob = if (!hasVectors) Future.successful(()) else Future {
-      spark.read.parquet(graft.build.TermVectors.vectorsPath(indexPath))
-        .filter(col("segmentId").isInCollection(srcSorted))
-        .join(permDf, Seq("segmentId", "docId"))
-        .select(col("newId").as("docId"), col("field"), col("term"),
-          col("tf"), col("positions"), col("starts"), col("ends"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/vectors")
-    }
-
-    // ---- postings: explode to per-(term, doc) entries (deletes purge in
-    // the inner permutation join), regroup per (field, term) in newId order,
-    // stream-encode bounded pieces
-    val entries = spark.read.parquet(IndexBuilder.postingsPath(indexPath))
-      .filter(col("segmentId").isInCollection(srcSorted))
-      .transform(IndexBuilder.withPayloadsCol)
-      .select("segmentId", "field", "term", "df", "ttf", "docDeltas", "tfs",
-        "positions", "lens", "skips", "payloads", "offsets")
-      .as[PostingRow]
-      .flatMap { p =>
-        val d = PostingsCodec.decode(p.df, p.docDeltas, p.tfs, p.positions, p.lens)
-        val pays = payloadSlices(d.tfs, d.posStart, p.payloads)
-        val offs = if (p.offsets == null) null
-          else PostingsCodec.decodeOffsets(d.tfs, p.offsets)
-        Iterator.tabulate(d.docIds.length) { i =>
-          val ps = java.util.Arrays.copyOfRange(d.posFlat, d.posStart(i), d.posStart(i + 1))
-          val pl = if (pays == null) null
-            else frameEntryPayload(pays, d.posStart(i), d.posStart(i + 1))
-          val of = if (offs == null) null
-            else flatOffsets(offs._1, offs._2, d.posStart(i), d.posStart(i + 1))
-          SortedEntryRow(p.field, p.term, p.segmentId, d.docIds(i), d.tfs(i),
-            ps, d.lens(i), pl, of)
-        }
-      }
-
-    // SALTED shuffle (VERDICT r3 #1): the repartition key carries the
-    // newId-range piece bucket alongside (field, term), so a hot term
-    // (df ≈ corpus size) spreads its pieces over MANY reducers instead of
-    // funnelling through one — the same skew handling the unsorted path
-    // gets structurally from its df > hotTermDf piece rows. Soundness:
-    // newIds are unique per (field, term), each salt bucket spans one
-    // disjoint newId range of width pieceEntries, and the encoder below
-    // never lets a piece cross a bucket boundary — so emitted piece rows
-    // keep globally disjoint docId ranges, which the read path already
-    // serves as first-class split rows.
-    val merged: Dataset[PostingRow] = entries.toDF()
-      .join(permDf, Seq("segmentId", "docId"))
-      .select(col("field"), col("term"), col("newId"), col("tf"),
-        col("positions"), col("fieldLen"), col("payload"), col("offsets"))
-      .withColumn("salt", (col("newId").cast("long") / pieceEntries).cast("int"))
-      .repartition(col("field"), col("term"), col("salt"))
-      .sortWithinPartitions(col("field"), col("term"), col("newId"))
-      .select(col("field"), col("term"), col("newId"), col("tf"),
-        col("positions"), col("fieldLen"), col("payload"), col("offsets"))
-      .as[(String, String, Int, Int, Array[Int], Int, Array[Byte], Array[Int])]
-      .mapPartitions { rows =>
-        val it = rows.buffered
-        new Iterator[PostingRow] {
-          private var nextRow: PostingRow = null
-          private def advance(): Unit = {
-            if (nextRow != null || !it.hasNext) return
-            val field = it.head._1
-            val term = it.head._2
-            // two salt buckets of one term can hash to the same partition;
-            // stopping at the bucket boundary keeps piece ranges disjoint
-            val salt = it.head._3 / pieceEntries
-            val enc = new PostingsCodec.Encoder
-            var n = 0
-            while (n < pieceEntries && it.hasNext &&
-              it.head._1 == field && it.head._2 == term &&
-              it.head._3 / pieceEntries == salt) {
-              val e = it.next()
-              enc.add(e._3, e._4, e._5, e._6, unframeEntryPayload(e._4, e._7), e._8)
-              n += 1
-            }
-            val enc2 = enc.finish()
-            nextRow = PostingRow(0, field, term, enc2.df, enc2.ttf,
-              enc2.docDeltas, enc2.tfs, enc2.positions, enc2.lens,
-              enc2.skips.map(s => SkipRow(s.lastDoc, s.docOff, s.tfOff,
-                s.posOff, s.cumDocs, s.maxTf, s.minLen)),
-              enc2.payloads, enc2.offsets)
-          }
-          override def hasNext: Boolean = { advance(); nextRow != null }
-          override def next(): PostingRow = {
-            advance(); val r = nextRow; nextRow = null; r
-          }
-        }
-      }
-    val postingsJob = Future {
-      merged.toDF().drop("segmentId")
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/postings")
-    }
-    Await.result(docsJob, Duration.Inf)
-    Await.result(vectorsJob, Duration.Inf)
-    Await.result(postingsJob, Duration.Inf)
-
-    renameStaged(spark, indexPath, staging, target, hasVectors)
+    val rw = SegmentRewrite.run(spark, indexPath, srcSorted, routed, staging,
+      withVectors = hasVectors, pieceEntries)
+    renameStaged(spark, indexPath, staging, s"/segmentId=$target", target, hasVectors)
 
     // raced-in deletes = current markers minus the applied snapshot,
     // remapped through the permutation table (their docs survived the purge);
@@ -650,43 +448,19 @@ object MergeJob {
       else graft.build.Deletes.deletedDf(spark, indexPath)
         .filter(col("segmentId").isInCollection(srcSorted))
         .join(appliedDf, Seq("segmentId", "docId"), "left_anti")
-        .join(permDf, Seq("segmentId", "docId"))
+        .join(rw.perm, Seq("segmentId", "docId"))
         .select("newId").as[Int].collect()
         .toSeq.map(n => (target, n))
 
+    // merged doc stats come off the rewrite's pinned sort (commitMerged
+    // then skips its re-read of the written doc store)
+    val docStats = rw.segs.headOption.map(d => (d.maxDoc, d.defaultSttf)).getOrElse((0L, 0L))
     commitMerged(spark, indexPath, srcSorted, target, statsAll, hasVectors,
-      dictWasValid, anyPurged, lateMarkers _, docStats = Some(docAgg))
+      dictWasValid, anyPurged, lateMarkers _, docStats = Some(docStats))
 
-    // the permutation table was only needed through the commit
     val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(staging), true)
     target
-  }
-
-  /** Frame positions [from, to)'s payload slices as VByte(len)+bytes each —
-    * the per-entry payload carrier of the distributed sorted merge. */
-  private def frameEntryPayload(pays: Array[Array[Byte]], from: Int, to: Int): Array[Byte] = {
-    val buf = new graft.codec.ByteBuf(16)
-    var k = from
-    while (k < to) {
-      val pl = pays(k)
-      if (pl == null) graft.codec.VByte.writeInt(buf, 0)
-      else { graft.codec.VByte.writeInt(buf, pl.length); buf.write(pl) }
-      k += 1
-    }
-    buf.toArray
-  }
-
-  /** Inverse of [[frameEntryPayload]] for one entry's `tf` positions. */
-  private def unframeEntryPayload(tf: Int, bytes: Array[Byte]): Array[Array[Byte]] = {
-    if (bytes == null) null
-    else {
-      val (starts, lens, flat) = PostingsCodec.decodePayloads(tf, bytes)
-      Array.tabulate(tf) { k =>
-        if (lens(k) == 0) null
-        else java.util.Arrays.copyOfRange(flat, starts(k), starts(k) + lens(k))
-      }
-    }
   }
 
   private def tombstonesDir(indexPath: String) = s"$indexPath/.tombstones"
@@ -731,7 +505,7 @@ object MergeJob {
 
   /** Slice the flat decoded offset arrays [from, to) into one entry's
     * [s0,e0,s1,e1,...] carrier. */
-  private def flatOffsets(starts: Array[Int], ends: Array[Int],
+  private[merge] def flatOffsets(starts: Array[Int], ends: Array[Int],
                           from: Int, to: Int): Array[Int] = {
     val out = new Array[Int]((to - from) * 2)
     var k = from
@@ -743,6 +517,9 @@ object MergeJob {
     out
   }
 
+  /** Decode one posting row, drop deleted docs (remap -1) and encode the
+    * survivors under their new docIds. The concat remap is monotonic, so the
+    * survivors stay in docId order. Returns the encoding and its first docId. */
   private def reencode(df: Int, docDeltas: Array[Byte], tfs: Array[Byte],
                        positions: Array[Byte], lens: Array[Byte],
                        payloads: Array[Byte], offsetBytes: Array[Byte],
@@ -751,39 +528,29 @@ object MergeJob {
     val pays = payloadSlices(d.tfs, d.posStart, payloads)
     val offs = if (offsetBytes == null) null
       else PostingsCodec.decodeOffsets(d.tfs, offsetBytes)
-    // a sorted-merge permutation is NOT monotonic within a segment, so the
-    // surviving entries are gathered and re-sorted by their new docId before
-    // encoding (Sorter.cs's SortingLeafReader view does the same reorder)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // (nid, idx)
-    var monotonic = true
-    var prev = -1
-    var i = 0
-    while (i < d.docIds.length) {
-      val nid = remap(d.docIds(i))
-      if (nid >= 0) { // deleted docs (-1) purge here
-        if (nid <= prev) monotonic = false
-        prev = nid
-        entries += ((nid, i))
-      }
-      i += 1
-    }
-    val ordered = if (monotonic) entries else entries.sortBy(_._1)
     val enc = new PostingsCodec.Encoder
-    ordered.foreach { case (nid, j) =>
-      val ps = java.util.Arrays.copyOfRange(d.posFlat, d.posStart(j), d.posStart(j + 1))
-      val pl = if (pays == null) null
-        else java.util.Arrays.copyOfRange(pays, d.posStart(j), d.posStart(j + 1))
-      val of = if (offs == null) null
-        else flatOffsets(offs._1, offs._2, d.posStart(j), d.posStart(j + 1))
-      enc.add(nid, d.tfs(j), ps, d.lens(j), pl, of)
+    var firstDoc = -1
+    var j = 0
+    while (j < d.docIds.length) {
+      val nid = remap(d.docIds(j))
+      if (nid >= 0) { // deleted docs (-1) purge here
+        if (firstDoc < 0) firstDoc = nid
+        val ps = java.util.Arrays.copyOfRange(d.posFlat, d.posStart(j), d.posStart(j + 1))
+        val pl = if (pays == null) null
+          else java.util.Arrays.copyOfRange(pays, d.posStart(j), d.posStart(j + 1))
+        val of = if (offs == null) null
+          else flatOffsets(offs._1, offs._2, d.posStart(j), d.posStart(j + 1))
+        enc.add(nid, d.tfs(j), ps, d.lens(j), pl, of)
+      }
+      j += 1
     }
-    (enc.finish(), ordered.headOption.map(_._1).getOrElse(0))
+    (enc.finish(), math.max(firstDoc, 0))
   }
 
   /** Per-position payload byte slices aligned with posFlat (null when the
     * list has no payload stream) — merge re-encodes payloads through the
     * same add() path as positions so purge/rebase keep them aligned. */
-  private def payloadSlices(tfs: Array[Int], posStart: Array[Int],
+  private[merge] def payloadSlices(tfs: Array[Int], posStart: Array[Int],
                             payloads: Array[Byte]): Array[Array[Byte]] = {
     if (payloads == null) return null
     val total = posStart(tfs.length)
@@ -800,8 +567,7 @@ object MergeJob {
     * becomes the cluster scheduler).
     */
   def mergeToPolicy(spark: SparkSession, indexPath: String,
-                    policy: TieredMergePolicy = new TieredMergePolicy(),
-                    sortedPermBroadcastMax: Int = SortedMergeMaxDocs): Int = {
+                    policy: TieredMergePolicy = new TieredMergePolicy()): Int = {
     import spark.implicits._
     var merges = 0
     var cont = true
@@ -812,8 +578,7 @@ object MergeJob {
         .as[SegmentStats].collect().map(s => s.segmentId -> s.maxDoc).toMap
       policy.findMerges(sizes) match {
         case m :: _ =>
-          merge(spark, indexPath, m.sources,
-            sortedPermBroadcastMax = sortedPermBroadcastMax)
+          merge(spark, indexPath, m.sources)
           merges += 1
         case Nil => cont = false
       }
@@ -831,9 +596,8 @@ object MergeJob {
     * (ScalarExpressions.segmentOf(url, parts)) and docIds are assigned in
     * the builder's per-segment (sortKey, url) order, so the OUTPUT is
     * content-identical to a fresh numSegments=parts build of the same live
-    * corpus — but produced by decoding + re-encoding the existing postings
-    * (one explode -> permutation join -> salted (seg, field, term) shuffle
-    * with bounded piece rows, the distributed-merge machinery) instead of
+    * corpus — but produced by a [[SegmentRewrite]] of the existing postings
+    * (the sorted merge's primitive, with hash routing) instead of
     * re-running tokenization, the expensive stage at 100 TB. Deletes are
     * APPLIED: the split output starts tombstone-free. Term vectors and
     * term blooms regenerate when the source carries them. Single-writer
@@ -851,217 +615,54 @@ object MergeJob {
     require(parts >= 1, s"parts must be >= 1 (got $parts)")
     val t0 = System.nanoTime()
     val cfg = IndexBuilder.readConfig(spark, srcPath)
-    val newCfg = cfg.copy(numSegments = parts)
-    IndexBuilder.writeConfig(spark, dstPath, newCfg)
-    val sorted = cfg.indexSort.isDefined
+    IndexBuilder.writeConfig(spark, dstPath, cfg.copy(numSegments = parts))
 
     val liveSrc = spark.read.parquet(IndexBuilder.statsPath(spark, srcPath))
       .select("segmentId").distinct().as[Int].collect().toSet
-    val docsSrc = spark.read.parquet(IndexBuilder.docsPath(srcPath))
+    val routed = spark.read.parquet(IndexBuilder.docsPath(srcPath))
       .filter(col("segmentId").isInCollection(liveSrc))
-    val liveDocs = docsSrc
       .join(graft.build.Deletes.deletedDf(spark, srcPath),
         Seq("segmentId", "docId"), "left_anti")
       .filter(docFilter)
-    val sortKeyCol =
-      if (sorted) col("sortKey") else lit(0d).as("sortKey")
-    val routed = liveDocs.withColumn("newSeg",
-      graft.functions.ScalarExpressions.segmentOf(col("url"), parts))
-
-    // ONE global contiguous rank in (newSeg, sortKey, url) order with the
-    // full doc-store payload riding along: appendRank pins the sorted rows
-    // (localCheckpoint), so the permutation, the new doc store, the
-    // per-segment offsets AND the doc-side stats below are all NARROW
-    // derivations of this single sort — the old shape re-scanned the source
-    // for the counts, wrote the permutation to a staging parquet and read it
-    // back, then joined the doc store against it (three extra passes).
-    val ranked = graft.Ranks.appendRank(
-      routed.select(col("segmentId"), col("docId"), col("newSeg"),
-        sortKeyCol, col("url"), col("fieldLen"), col("normByte")),
-      "rank", Seq(col("newSeg").asc, col("sortKey").asc, col("url").asc))
-
-    // per-newSeg offset (rank is newSeg-major contiguous: offset = min rank
-    // - 1) + maxDoc + default-field sttf from one tiny aggregate
-    val segAgg = ranked.groupBy(col("newSeg"))
-      .agg(min(col("rank")).as("minRank"), count(lit(1)).as("maxDoc"),
-        sum(col("fieldLen")).as("defaultSttf"))
-      .collect().sortBy(_.getAs[Int]("newSeg"))
-    val segOff: Map[Int, Long] =
-      segAgg.map(r => r.getAs[Int]("newSeg") -> (r.getAs[Int]("minRank").toLong - 1L)).toMap
-    val offDf = broadcast(spark.createDataset(segOff.toSeq).toDF("newSeg", "segOff"))
-    val withNew = ranked.join(offDf, "newSeg")
-      .withColumn("newId", (col("rank") - 1 - col("segOff")).cast("int"))
-    val permDf0 = withNew.select("segmentId", "docId", "newSeg", "newId")
-    // scale-adaptive permutation attachment (the doc count is already in
-    // hand from segAgg — no extra job): up to the broadcast budget the
-    // postings/vectors rebase joins ship the permutation to every task and
-    // the big exploded-entries side is NEVER shuffled by (segmentId, docId);
-    // above it both sides shuffle (the fully distributed shape). Mirrors the
-    // merge path's SortedMergeMaxDocs cutover; override with
-    // spark.graft.split.permBroadcastMaxDocs.
-    val totalDocs = segAgg.map(_.getAs[Long]("maxDoc")).sum
-    val permBroadcastMax = spark.conf.getOption("spark.graft.split.permBroadcastMaxDocs")
-      .map(_.toLong).getOrElse((1L << 22))
-    val permDf = if (totalDocs <= permBroadcastMax) broadcast(permDf0) else permDf0
-
-    // doc store straight off the pinned sort (no join-back), concurrent with
-    // the postings rebuild below — the two jobs share no dependency
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val docCols = Seq(col("newSeg").as("segmentId"), col("newId").as("docId"),
-      col("url"), col("fieldLen"), col("normByte")) ++
-      (if (sorted) Seq(col("sortKey")) else Nil)
-    val docsJob = Future {
-      withNew.select(docCols: _*)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("segmentId").parquet(IndexBuilder.docsPath(dstPath))
-    }
-
-    // term vectors ride along when present
-    val vectorsJob = if (!graft.build.TermVectors.enabled(spark, srcPath))
-      Future.successful(()) else Future {
-      spark.read.parquet(graft.build.TermVectors.vectorsPath(srcPath))
-        .filter(col("segmentId").isInCollection(liveSrc))
-        .join(permDf, Seq("segmentId", "docId"))
-        .select(col("newSeg").as("segmentId"), col("newId").as("docId"),
-          col("field"), col("term"), col("tf"), col("positions"),
-          col("starts"), col("ends"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("segmentId").parquet(graft.build.TermVectors.vectorsPath(dstPath))
-    }
-
-    // postings: explode to per-(term, doc) entries, route through the
-    // permutation (deleted docs fall out of the inner join), regroup per
-    // (newSeg, field, term) in newId order with the salt-bucket discipline
-    // of the distributed sorted merge, stream-encode bounded pieces
-    val entries = spark.read.parquet(IndexBuilder.postingsPath(srcPath))
-      .filter(col("segmentId").isInCollection(liveSrc))
-      .transform(IndexBuilder.withPayloadsCol)
-      .select("segmentId", "field", "term", "df", "ttf", "docDeltas", "tfs",
-        "positions", "lens", "skips", "payloads", "offsets")
-      .as[PostingRow]
-      .flatMap { p =>
-        val d = PostingsCodec.decode(p.df, p.docDeltas, p.tfs, p.positions, p.lens)
-        val pays = payloadSlices(d.tfs, d.posStart, p.payloads)
-        val offs = if (p.offsets == null) null
-          else PostingsCodec.decodeOffsets(d.tfs, p.offsets)
-        Iterator.tabulate(d.docIds.length) { i =>
-          val ps = java.util.Arrays.copyOfRange(d.posFlat, d.posStart(i), d.posStart(i + 1))
-          val pl = if (pays == null) null
-            else frameEntryPayload(pays, d.posStart(i), d.posStart(i + 1))
-          val of = if (offs == null) null
-            else flatOffsets(offs._1, offs._2, d.posStart(i), d.posStart(i + 1))
-          SortedEntryRow(p.field, p.term, p.segmentId, d.docIds(i), d.tfs(i),
-            ps, d.lens(i), pl, of)
-        }
-      }
-    val shardRows: Dataset[PostingRow] = entries.toDF()
-      .join(permDf, Seq("segmentId", "docId"))
-      .select(col("newSeg"), col("field"), col("term"), col("newId"),
-        col("tf"), col("positions"), col("fieldLen"), col("payload"), col("offsets"))
-      .withColumn("salt", (col("newId").cast("long") / pieceEntries).cast("int"))
-      .repartition(col("newSeg"), col("field"), col("term"), col("salt"))
-      .sortWithinPartitions(col("newSeg"), col("field"), col("term"), col("newId"))
-      .select(col("newSeg"), col("field"), col("term"), col("newId"),
-        col("tf"), col("positions"), col("fieldLen"), col("payload"), col("offsets"))
-      .as[(Int, String, String, Int, Int, Array[Int], Int, Array[Byte], Array[Int])]
-      .mapPartitions { rows =>
-        val it = rows.buffered
-        new Iterator[PostingRow] {
-          private var nextRow: PostingRow = null
-          private def advance(): Unit = {
-            if (nextRow != null || !it.hasNext) return
-            val seg = it.head._1
-            val field = it.head._2
-            val term = it.head._3
-            val salt = it.head._4 / pieceEntries
-            val enc = new PostingsCodec.Encoder
-            var n = 0
-            while (n < pieceEntries && it.hasNext && it.head._1 == seg &&
-              it.head._2 == field && it.head._3 == term &&
-              it.head._4 / pieceEntries == salt) {
-              val e = it.next()
-              enc.add(e._4, e._5, e._6, e._7, unframeEntryPayload(e._5, e._8), e._9)
-              n += 1
-            }
-            val enc2 = enc.finish()
-            nextRow = PostingRow(seg, field, term, enc2.df, enc2.ttf,
-              enc2.docDeltas, enc2.tfs, enc2.positions, enc2.lens,
-              enc2.skips.map(s => SkipRow(s.lastDoc, s.docOff, s.tfOff,
-                s.posOff, s.cumDocs, s.maxTf, s.minLen)),
-              enc2.payloads, enc2.offsets)
-          }
-          override def hasNext: Boolean = { advance(); nextRow != null }
-          override def next(): PostingRow = {
-            advance(); val r = nextRow; nextRow = null; r
-          }
-        }
-      }
-    val postingsJob = Future {
-      shardRows.toDF().write.mode(SaveMode.Overwrite)
-        .partitionBy("segmentId").parquet(IndexBuilder.postingsPath(dstPath))
-    }
-    Await.result(docsJob, Duration.Inf)
-    Await.result(vectorsJob, Duration.Inf)
-    Await.result(postingsJob, Duration.Inf)
+      .withColumn("newSeg", graft.functions.ScalarExpressions.segmentOf(col("url"), parts))
+    val segs = SegmentRewrite.run(spark, srcPath, liveSrc, routed, dstPath,
+      withVectors = graft.build.TermVectors.enabled(spark, srcPath), pieceEntries).segs
 
     // term blooms regenerate when the source used them
-    if (cfg.bloomFilter) {
-      spark.read.parquet(IndexBuilder.postingsPath(dstPath))
-        .select(col("segmentId").cast("int").as("segmentId"), col("field"), col("term"))
-        .as[(Int, String, String)]
-        .groupByKey(r => (r._1, r._2))
-        .mapGroups { (key: (Int, String), rs: Iterator[(Int, String, String)]) =>
-          val (mask, bits) = graft.codec.TermBloom.build(
-            rs.map(r => graft.codec.TermBloom.hash(r._3)))
-          graft.codec.BloomRow(key._1, key._2, mask, bits)
-        }
-        .write.mode(SaveMode.Overwrite).parquet(IndexBuilder.bloomsPath(dstPath))
-    }
+    if (cfg.bloomFilter)
+      IndexBuilder.writeBlooms(spark.read.parquet(IndexBuilder.postingsPath(dstPath)),
+        dstPath, SaveMode.Overwrite)
 
     // stats (generation 0 of the fresh index) + manifest, builder formula.
-    // The doc-store side (maxDoc, default sttf) comes from segAgg — already
-    // aggregated off the pinned sort, no re-read of the written doc store;
+    // The doc-store side (maxDoc, default sttf) comes from the rewrite's
+    // aggregate — off its pinned sort, no re-read of the written doc store;
     // the postings side is ONE read of the written postings whose slim
-    // projection is pinned and SHARED with the dictionary refresh below
-    // (the old shape scanned the postings output twice).
-    val fieldNames = IndexBuilder.DefaultField +: cfg.extraFields.map(_._1)
-    val segDocs = spark.createDataset(segAgg.toSeq.map(r =>
-        (r.getAs[Int]("newSeg"), r.getAs[Long]("maxDoc"), r.getAs[Long]("defaultSttf"))))
+    // projection is pinned and SHARED with the dictionary refresh below.
+    val segDocs = segs.map(d => (d.newSeg, d.maxDoc, d.defaultSttf))
       .toDF("segmentId", "maxDoc", "defaultSttf")
     val postProj = spark.read.parquet(IndexBuilder.postingsPath(dstPath))
       .select(col("segmentId").cast("int").as("segmentId"), col("field"),
         col("term"), col("df"), col("ttf"))
       .persist()
-    val segFieldTerms = postProj
-      .groupBy(col("segmentId"), col("field"))
-      .agg(count(lit(1)).as("sumDocFreq"), sum(col("ttf")).as("postSttf"))
-    val stats = segDocs.crossJoin(fieldNames.toDF("field"))
-      .join(segFieldTerms, Seq("segmentId", "field"), "left")
-      .select(col("segmentId").cast("int").as("segmentId"), col("field"),
-        col("maxDoc").cast("long").as("maxDoc"),
-        when(col("field") === IndexBuilder.DefaultField, col("defaultSttf"))
-          .otherwise(coalesce(col("postSttf"), lit(0L)))
-          .cast("long").as("sumTotalTermFreq"),
-        coalesce(col("sumDocFreq"), lit(0L)).cast("long").as("sumDocFreq"))
-      .as[SegmentStats].collect()
-    spark.createDataset(stats.toSeq).repartition(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dstPath/stats")
-    val numDocs = stats.filter(_.field == IndexBuilder.DefaultField).map(_.maxDoc).sum
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    val now = System.currentTimeMillis()
-    val manifest = (0 until parts).map { seg =>
-      val st = stats.find(s => s.segmentId == seg && s.field == IndexBuilder.DefaultField)
-      graft.model.ManifestRow(seg, "done", st.map(_.maxDoc).getOrElse(0L),
-        st.map(_.sumDocFreq).getOrElse(0L), numDocs / math.max(elapsed, 1e-9),
-        1, now - (elapsed * 1000).toLong, now)
-    }
-    spark.createDataset(manifest).repartition(1).write.mode(SaveMode.Overwrite)
-      .parquet(IndexBuilder.manifestPath(dstPath))
-    graft.build.DictTable.write(spark, dstPath, Some(postProj))
-    postProj.unpersist()
-    numDocs
+    try {
+      val stats = IndexBuilder.segmentStats(segDocs, postProj,
+        IndexBuilder.DefaultField +: cfg.extraFields.map(_._1))
+      spark.createDataset(stats.toSeq).repartition(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"$dstPath/stats")
+      val numDocs = stats.filter(_.field == IndexBuilder.DefaultField).map(_.maxDoc).sum
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val now = System.currentTimeMillis()
+      val manifest = (0 until parts).map { seg =>
+        val st = stats.find(s => s.segmentId == seg && s.field == IndexBuilder.DefaultField)
+        graft.model.ManifestRow(seg, "done", st.map(_.maxDoc).getOrElse(0L),
+          st.map(_.sumDocFreq).getOrElse(0L), numDocs / math.max(elapsed, 1e-9),
+          1, now - (elapsed * 1000).toLong, now)
+      }
+      spark.createDataset(manifest).repartition(1).write.mode(SaveMode.Overwrite)
+        .parquet(IndexBuilder.manifestPath(dstPath))
+      graft.build.DictTable.write(spark, dstPath, Some(postProj))
+      numDocs
+    } finally postProj.unpersist()
   }
 
   /** PKIndexSplitter analog

@@ -101,7 +101,7 @@ class OffsetsSpec extends AnyFunSuite {
       IndexBuilder.BuildConfig(2, "simple", groupSize = 2,
         indexOffsets = true, indexSort = Some("nlen")))
     graft.build.Deletes.deleteUrls(spark, b, Seq("u0011").toDF("url"))
-    MergeJob.merge(spark, b, List(0, 1), sortedPermBroadcastMax = 0)
+    MergeJob.merge(spark, b, List(0, 1))
     val se = new Searcher(spark, b)
     val got = se.postingsOffsets(Seq("bravo"))
       .join(se.docs.select("segmentId", "docId", "url"), Seq("segmentId", "docId"))

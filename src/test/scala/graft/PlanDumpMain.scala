@@ -130,8 +130,7 @@ object PlanDump {
     countJobs("sorted_merge_dist") {
       graft.merge.MergeJob.mergeToPolicy(spark, sortedPath,
         new graft.merge.TieredMergePolicy(segsPerTier = 1.0, maxMergeAtOnce = 8,
-          floorSegmentDocs = 1000),
-        sortedPermBroadcastMax = 0)
+          floorSegmentDocs = 1000))
     }
     println("PLANDUMP DONE tag=" + tag)
   }

@@ -14,11 +14,6 @@ import graft.search._
 object SoakSorted {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    // "dist" as arg 2 forces the fully distributed sorted-merge remap
-    // (permutation-as-table path) regardless of size — the scale soak for
-    // MergeJob.mergeSortedDistributed
-    val permMax =
-      if (args.length > 1 && args(1) == "dist") 0 else MergeJob.SortedMergeMaxDocs
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -56,8 +51,7 @@ object SoakSorted {
     graft.build.Deletes.deleteByQuery(s0, base, rare)
     val tm0 = System.nanoTime()
     val merges = MergeJob.mergeToPolicy(spark, base,
-      new TieredMergePolicy(segsPerTier = 2.0, maxMergeAtOnce = 8, floorSegmentDocs = 1000),
-      sortedPermBroadcastMax = permMax)
+      new TieredMergePolicy(segsPerTier = 2.0, maxMergeAtOnce = 8, floorSegmentDocs = 1000))
     val mergeSec = (System.nanoTime() - tm0) / 1e9
     require(merges >= 1, "expected sorted merge rounds")
 

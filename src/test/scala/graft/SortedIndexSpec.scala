@@ -120,51 +120,59 @@ class SortedIndexSpec extends AnyFunSuite {
     assert(early == full)
   }
 
-  test("distributed sorted merge (above the broadcast budget) == broadcast path") {
+  test("sorted merge ≡ fresh single-segment sorted build of the live docs") {
     import spark.implicits._
     val df = spark.createDataFrame(PagesGen.local(N)).toDF("url", "text")
       .withColumn("nlen", length(col("text")).cast("long"))
     val victims = Seq(PagesGen.urlOf(7), PagesGen.urlOf(101), PagesGen.urlOf(233))
-    def buildOne(): String = {
-      val b = Files.createTempDirectory("graftsortdist").toString
-      IndexBuilder.build(spark, df, b,
-        IndexBuilder.BuildConfig(4, "simple", groupSize = 4, indexSort = Some("nlen")))
-      graft.build.Deletes.deleteUrls(spark, b, victims.toDF("url"))
-      b
-    }
-    val bBroad = buildOne()
-    val bDist = buildOne()
-    MergeJob.merge(spark, bBroad, List(0, 1, 2, 3))
-    // sortedPermBroadcastMax = 0 forces the distributed remap path
-    MergeJob.merge(spark, bDist, List(0, 1, 2, 3), sortedPermBroadcastMax = 0)
+    val bMerged = Files.createTempDirectory("graftsortmerged").toString
+    IndexBuilder.build(spark, df, bMerged,
+      IndexBuilder.BuildConfig(4, "simple", groupSize = 4, indexSort = Some("nlen")))
+    graft.build.Deletes.deleteUrls(spark, bMerged, victims.toDF("url"))
+    MergeJob.merge(spark, bMerged, List(0, 1, 2, 3))
+    // the independent reference: the live docs built fresh into one sorted
+    // segment (the builder assigns docIds in (sortKey, url) order itself)
+    val bFresh = Files.createTempDirectory("graftsortfresh").toString
+    IndexBuilder.build(spark, df.filter(!col("url").isin(victims: _*)), bFresh,
+      IndexBuilder.BuildConfig(1, "simple", groupSize = 1, indexSort = Some("nlen")))
 
-    val report = CheckIndex.run(spark, bDist) // includes the sort-order invariant
+    val report = CheckIndex.run(spark, bMerged) // includes the sort-order invariant
     assert(report.ok, report.violations.mkString("; "))
 
-    // both paths committed exactly one live segment with identical docs
+    // one live segment each, with identical doc stores (the segment ids
+    // differ: the merge commits a fresh id from the merge band)
     def docsOf(b: String) = new Searcher(spark, b).docs
-      .select("docId", "url", "fieldLen", "sortKey")
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getDouble(3)))
+      .select("docId", "url", "fieldLen", "normByte", "sortKey")
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getByte(3), r.getDouble(4)))
       .sortBy(_._1).toSeq
-    assert(docsOf(bDist) == docsOf(bBroad), "doc stores diverge across merge paths")
+    val merged = docsOf(bMerged)
+    assert(merged.size == N - victims.size)
+    assert(merged == docsOf(bFresh), "merged doc store diverges from the fresh build")
 
-    // postings agree term-by-term (piece chunking may differ; df/ttf must not)
-    def postingStats(b: String) =
+    // postings agree term-by-term (piece chunking may differ; df/ttf must
+    // not) — live segments only: the sources survive one commit as tombstones
+    def postingStats(b: String) = {
+      val s = new Searcher(spark, b)
       spark.read.parquet(graft.build.IndexBuilder.postingsPath(b))
+        .join(s.docs.select("segmentId").distinct(), "segmentId")
         .groupBy("field", "term")
         .agg(sum("df").as("df"), sum("ttf").as("ttf"))
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .sortBy(t => (t._1, t._2)).toSeq
-    assert(postingStats(bDist) == postingStats(bBroad), "postings diverge across merge paths")
+    }
+    assert(postingStats(bMerged) == postingStats(bFresh), "postings diverge from the fresh build")
 
-    // and the serving paths agree: sorted top-k, early termination, BM25 top-k
-    val sB = new Searcher(spark, bBroad)
-    val sD = new Searcher(spark, bDist)
-    assert(sD.sortedTopK(20).collect().toSeq == sB.sortedTopK(20).collect().toSeq)
+    // and the serving paths agree: sorted top-k, early termination, BM25
+    // top-k (hits compared without the segment id)
+    val sM = new Searcher(spark, bMerged)
+    val sF = new Searcher(spark, bFresh)
+    assert(sM.sortedTopK(20).collect().toSeq == sF.sortedTopK(20).collect().toSeq)
     val q = TermQ("quick")
-    assert(sD.searchSortedEarly(q, 10).collect().toSeq ==
-      sB.searchSortedEarly(q, 10).collect().toSeq)
-    assert(sD.search(q, 10).collect().toSeq == sB.search(q, 10).collect().toSeq)
+    assert(sM.searchSortedEarly(q, 10).collect().toSeq ==
+      sF.searchSortedEarly(q, 10).collect().toSeq)
+    def hits(s: Searcher) = s.search(q, 10).select("url", "score", "docId").collect().toSeq
+    assert(hits(sM).nonEmpty)
+    assert(hits(sM) == hits(sF))
   }
 
   test("distributed sorted merge salts hot terms: >1 task emits disjoint pieces") {
@@ -185,8 +193,7 @@ class SortedIndexSpec extends AnyFunSuite {
     val prev = spark.conf.get(coalesceKey, "true")
     spark.conf.set(coalesceKey, "false")
     try
-      MergeJob.merge(spark, b, List(0, 1, 2, 3),
-        sortedPermBroadcastMax = 0, sortedPieceEntries = 64)
+      MergeJob.merge(spark, b, List(0, 1, 2, 3), sortedPieceEntries = 64)
     finally spark.conf.set(coalesceKey, prev)
 
     // source segment dirs survive one commit as tombstones — read only the
@@ -239,7 +246,7 @@ class SortedIndexSpec extends AnyFunSuite {
         .map(r => r.getString(0) -> r.getDouble(1)).toMap
     val before = scores(s0)
     graft.build.Deletes.deleteUrls(spark, b, Seq("u0005", "u0050").toDF("url"))
-    MergeJob.merge(spark, b, List(0, 1), sortedPermBroadcastMax = 0)
+    MergeJob.merge(spark, b, List(0, 1))
     val s1 = new Searcher(spark, b, mode = ExactDouble)
     assert(scores(s1) == before -- Seq("u0005", "u0050"),
       "payload scores diverge after a distributed purging sorted merge")

@@ -1,6 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SparkInternals
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.build.{CheckIndex, Deletes, IndexBuilder, PagesGen}
 import graft.merge.MergeJob
 import graft.search._
@@ -104,6 +107,50 @@ class SplitIndexSpec extends AnyFunSuite {
     val src = new Searcher(spark, s"$base/src")
     val srcUrls = src.search(q, N).collect().map(_.getString(0)).toSet
     assert((matchUrls(s"$base/pkA") ++ matchUrls(s"$base/pkB")) == srcUrls)
+  }
+
+  /** Physical plans of every SQL execution `body` runs. */
+  private def plansOf(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; SparkInternals.drainListenerBus(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
+  /** The permutation join — the inner join on (segmentId, docId) that
+    * rebases postings and vectors — planned as a broadcast or a shuffle. */
+  private def permJoin(kind: String) =
+    (kind + """ \[segmentId#\d+, docId#\d+\], \[segmentId#\d+, docId#\d+\], Inner""").r
+  private val permBroadcast = permJoin("BroadcastHashJoin")
+  private val permShuffled = permJoin("(SortMergeJoin|ShuffledHashJoin)")
+
+  private def splitPlans(dst: String): Seq[String] =
+    plansOf(MergeJob.splitIndex(spark, s"${env._1}/src", s"${env._1}/$dst", 3))
+
+  test("split broadcasts a permutation that fits the broadcast threshold") {
+    val plans = splitPlans("bcastDefault")
+    assert(plans.exists(p => permBroadcast.findFirstIn(p).isDefined),
+      plans.mkString("no broadcast permutation join in:\n", "\n----\n", ""))
+  }
+
+  test("split shuffles a permutation above spark.sql.autoBroadcastJoinThreshold") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1024")
+    val plans =
+      try splitPlans("bcast1k")
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(plans.exists(p => permShuffled.findFirstIn(p).isDefined),
+      plans.mkString("no shuffled permutation join in:\n", "\n----\n", ""))
+    plans.foreach { p =>
+      assert(permBroadcast.findFirstIn(p).isEmpty, s"permutation broadcast past a 1 KB threshold:\n$p")
+    }
   }
 
   test("deleted urls are gone from the split output") {
