@@ -193,7 +193,8 @@ object Bench {
       graft.pipeline.Dedup.nearDupPairs(skewed, "doc_id", "text", k = 3,
         numHashes = 12, rowsPerBand = 3, tNum = 7, tDen = 10, maxBucket = 1000).count()
     }
-    // duplicate clustering: connected components (hash-min rounds) over the
+    // duplicate clustering: connected components (driver union-find, or
+    // large-star/small-star rounds above the broadcast budget) over the
     // near-dup pair graph — the post-pairs "keep one representative" step
     results("dedup_clusters") = timeMedian(trials) {
       val pairs = graft.pipeline.Dedup.nearDupPairs(docs, "doc_id", "text",

@@ -65,6 +65,27 @@ object BenchScale {
     s(math.min(s.length - 1, math.ceil(p * s.length).toInt - 1).max(0))
   }
 
+  private val VarianceHeader = "## Variance disclosure"
+
+  /** The variance-disclosure section of an old BASELINE.md (from its
+    * header to EOF, with a leading newline) with `newRow` inserted after
+    * the last row of the FIRST table under the header — a later table in
+    * the section keeps its rows. No header: "". No table: the row is
+    * appended. */
+  private[graft] def carriedVariance(old: String, newRow: String): String = {
+    val i = old.indexOf(VarianceHeader)
+    if (i < 0) "" else {
+      val lines = old.substring(i).stripLineEnd.split("\n", -1).toBuffer
+      val first = lines.indexWhere(_.startsWith("|"))
+      if (first < 0) lines.append(newRow)
+      else {
+        val end = lines.indexWhere(!_.startsWith("|"), first)
+        lines.insert(if (end < 0) lines.length else end, newRow)
+      }
+      "\n" + lines.mkString("\n") + "\n"
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("BENCH_N", "4000000").toLong
     val trials = sys.env.getOrElse("BENCH_TRIALS", "3").toInt
@@ -150,21 +171,11 @@ object BenchScale {
     // workflow re-appended it by hand after every run): carry the existing
     // section over verbatim, with this run's row appended to its table.
     val baselinePath = java.nio.file.Paths.get("BENCH/BASELINE.md")
-    val varianceHeader = "## Variance disclosure"
     val newRow = f"| $n%d-pages run | ${n / 1000000}%dM | $trials%d | $efficiency%.3f | appended by BenchScale |"
     val carried: String =
-      if (java.nio.file.Files.exists(baselinePath)) {
-        val old = new String(java.nio.file.Files.readAllBytes(baselinePath), "UTF-8")
-        val i = old.indexOf(varianceHeader)
-        if (i < 0) "" else {
-          val section = old.substring(i).stripLineEnd
-          // insert the new row right after the last existing table row
-          val lines = section.split("\n", -1).toBuffer
-          val lastRow = lines.lastIndexWhere(_.startsWith("|"))
-          if (lastRow >= 0) lines.insert(lastRow + 1, newRow) else lines.append(newRow)
-          "\n" + lines.mkString("\n") + "\n"
-        }
-      } else ""
+      if (java.nio.file.Files.exists(baselinePath))
+        carriedVariance(new String(java.nio.file.Files.readAllBytes(baselinePath), "UTF-8"), newRow)
+      else ""
     val out = new java.io.File("BENCH")
     out.mkdirs()
     val w = new java.io.PrintWriter("BENCH/BASELINE.md", "UTF-8")

@@ -90,7 +90,8 @@ object QueriesPipeline {
         maxBucket = Int.MaxValue).orderBy("ida", "idb")),
 
     // duplicate CLUSTERS: connected components over the Jaccard pair graph
-    // (hash-min label propagation) — chains collapse to one representative,
+    // (driver union-find under the broadcast budget, large-star/small-star
+    // rounds above it) — chains collapse to one representative,
     // where per-pair dedup would keep two of three
     "q_dedup_clusters" -> ((s, dir) => {
       val sh = Dedup.shingles(documents(s, dir), "doc_id", "text", 3)

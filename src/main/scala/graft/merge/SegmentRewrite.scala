@@ -2,7 +2,6 @@ package graft.merge
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import graft.build.{ConcurrentWrites, IndexBuilder, TermVectors}
 import graft.codec.PostingsCodec
 import graft.model._
@@ -73,11 +72,10 @@ private[merge] object SegmentRewrite {
     val withNew = ranked.join(offDf, "newSeg")
       .withColumn("newId", (col("rank") - 1 - col("segOff")).cast("int"))
     val permAll = withNew.select("segmentId", "docId", "newSeg", "newId")
-    // broadcast by Spark's own per-row size estimate (row header + fixed
-    // slots) — the doc count is already in hand, no extra job
-    val permBytes = segAgg.map(_._3).sum * (8L + permAll.schema.map(_.dataType.defaultSize).sum)
-    val threshold = SQLConf.get.autoBroadcastJoinThreshold
-    val perm = if (threshold > 0 && permBytes <= threshold) broadcast(permAll) else permAll
+    // the doc count is already in hand: sizing the permutation costs no job
+    val perm =
+      if (graft.BroadcastBudget.fits(segAgg.map(_._3).sum, permAll.schema)) broadcast(permAll)
+      else permAll
 
     def partitioned(df: DataFrame, path: String): Unit =
       df.write.mode(SaveMode.Overwrite).partitionBy("segmentId").parquet(path)

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Large-scale training-data deduplication operators. All are pure
@@ -42,28 +43,45 @@ object PipelineMetrics {
     * "lshCandidates", "simhashPairs", "embedDupPairs"). */
   def lastDrops(site: String): DropStats =
     drops.getOrDefault(site, DropStats(0L, 0L))
+
+  /** How a [[Dedup.dupClusters]] run went: `rounds` large-star + small-star
+    * rounds ran as Spark jobs, then the labels came either from the
+    * star-forest fixpoint or — `inMemory` — from a union-find on the driver
+    * once the edges fit the broadcast budget (0 rounds + inMemory: the pair
+    * graph fit from the start). */
+  final case class ClusterStats(rounds: Int, inMemory: Boolean)
+  @volatile private var clusters = ClusterStats(0, inMemory = false)
+
+  private[pipeline] def recordClusters(stats: ClusterStats): Unit = clusters = stats
+
+  /** Stats of the most recent `dupClusters` run in this JVM. */
+  def lastClusters: ClusterStats = clusters
 }
 
 object Dedup {
 
   /** Fast-path bound on over-cap bucket keys collected to the driver by
-    * [[dropOverCap]]; above it the aggregate + semi-join fallback runs. */
+    * [[dropOverCap]]; above it the over-cap keys stay distributed. */
   private[graft] val MaxDriverOverKeys = 10000
 
   /** Drop rows of `banded` whose bucket (keyed by `keyCols`) exceeds `cap`
-    * members, SURFACING what was dropped via [[PipelineMetrics]].
+    * members, SURFACING what was dropped via [[PipelineMetrics]]. A row
+    * with a null key is in no bucket — the bucket join never matches it —
+    * so it is never dropped and never counted.
     *
     * Over-cap buckets are RARE by construction (each holds > cap rows, so
     * there are at most |rows|/cap of them): the common path collects the
     * over-cap keys (bounded by [[MaxDriverOverKeys]]) in ONE aggregate job
     * and removes them with a broadcast anti-join — no persist pinned for the
     * session, no second corpus-wide shuffle against the bucket-size
-    * aggregate. Only when the key list would exceed the driver bound does
-    * the old aggregate + semi-join shape run instead. */
-  private[pipeline] def dropOverCap(banded: DataFrame, keyCols: Seq[String],
-                                    cap: Int, site: String): DataFrame = {
-    val sizes = banded.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("bsz"))
-    val head = sizes.filter(col("bsz") > cap).limit(MaxDriverOverKeys + 1).collect()
+    * aggregate. Only when the key list would exceed the driver bound is it
+    * tallied by a second aggregate and anti-joined shuffled instead. */
+  private[graft] def dropOverCap(banded: DataFrame, keyCols: Seq[String],
+                                 cap: Int, site: String): DataFrame = {
+    val over = banded.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("bsz"))
+      .filter(col("bsz") > cap)
+    val head = over.limit(MaxDriverOverKeys + 1).collect()
     if (head.length <= MaxDriverOverKeys) {
       PipelineMetrics.record(site, cap, head.length.toLong,
         head.iterator.map(_.getLong(keyCols.length)).sum)
@@ -71,7 +89,7 @@ object Dedup {
       else {
         val spark = banded.sparkSession
         val keySchema = org.apache.spark.sql.types.StructType(
-          sizes.schema.fields.take(keyCols.length))
+          over.schema.fields.take(keyCols.length))
         val bad = spark.createDataFrame(
           spark.sparkContext.parallelize(
             head.toIndexedSeq.map(r =>
@@ -80,14 +98,11 @@ object Dedup {
         banded.join(broadcast(bad), keyCols, "left_anti")
       }
     } else {
-      // many over-cap buckets: exact tally + semi-join against the under-cap
-      // keys (two aggregate computations, but this path is the exception)
-      val over = sizes.filter(col("bsz") > cap)
-        .agg(count(lit(1)).as("b"), coalesce(sum(col("bsz")), lit(0L)).as("r"))
-        .collect()(0)
-      PipelineMetrics.record(site, cap, over.getLong(0), over.getLong(1))
-      banded.join(sizes.filter(col("bsz") <= cap).select(keyCols.map(col): _*),
-        keyCols, "left_semi")
+      // many over-cap buckets: exact tally, then the same anti-join with
+      // the key list left distributed (this path is the exception)
+      val tally = over.agg(count(lit(1)), coalesce(sum(col("bsz")), lit(0L))).collect()(0)
+      PipelineMetrics.record(site, cap, tally.getLong(0), tally.getLong(1))
+      banded.join(over.select(keyCols.map(col): _*), keyCols, "left_anti")
     }
   }
 
@@ -283,53 +298,104 @@ object Dedup {
     * of three). Labels every doc that appears in a pair with its
     * component's minimum id (the canonical representative): (doc_id,
     * cluster). Docs with no duplicate pair are their own cluster and are
-    * not emitted.
+    * not emitted; a pair with a null id says nothing and is ignored.
     *
-    * Algorithm: hash-min label propagation. Every node starts labeled with
-    * its own id; each round labels flow across edges and nodes keep the
-    * minimum seen; at fixpoint the label is the component min. Each round
-    * is one join keyed by node id + one groupBy(min) — two shuffles over
-    * |E|+|V| rows, no driver-side graph state, lineage truncated per round
-    * (localCheckpoint) so rounds don't stack plans. Rounds = graph
-    * diameter; LSH candidate clusters are near-cliques (2-3 rounds in
-    * practice). Non-convergence within `maxIter` THROWS rather than
-    * returning silently wrong labels (the no-silent-caps rule). At 100 TB
-    * swap localCheckpoint for a reliable checkpoint dir; the per-round
-    * shape is unchanged.
+    * Algorithm: one loop with a size exit, no round cap.
+    *  - An edge set that fits Spark's broadcast budget
+    *    ([[graft.BroadcastBudget]]) is collected by one `limit(budget + 1)`
+    *    collect that also sizes it, and solved on the driver by
+    *    union-find; the labels come back as a local DataFrame, so
+    *    collecting them starts no job.
+    *  - A larger one runs large-star + small-star rounds (Kiveris et al.,
+    *    "Connected Components in MapReduce and Beyond", SoCC 2014): each
+    *    round links every node's larger neighbours, then its smaller ones,
+    *    to its neighbourhood minimum. Components never change, the edge
+    *    count never grows, and the graph becomes a forest of stars centred
+    *    on the component minima in O(log² n) rounds (≈ log n in practice:
+    *    a 1001-node path in shuffled id order takes 8). One aggregate per
+    *    round checks for that fixpoint — whose labels are then each node's
+    *    neighbourhood minimum — and re-checks the size exit, since the edge
+    *    set shrinks as stars form. Rounds truncate lineage with
+    *    localCheckpoint.
+    * [[PipelineMetrics.lastClusters]] reports the path and the rounds.
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def dupClusters(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
     val edges = pairs.select(col("ida").cast("long").as("a"), col("idb").cast("long").as("b"))
-      .unionByName(pairs.select(col("idb").cast("long").as("a"), col("ida").cast("long").as("b")))
-      .distinct().localCheckpoint()
-    var labels = edges.select(col("a").as("id")).distinct()
-      .select(col("id"), col("id").as("comp")).localCheckpoint()
-    // convergence = no label changed this round. Labels are elementwise
-    // NON-INCREASING over a FIXED id set (each round takes a min with the
-    // previous value), so the rounds' label sums strictly decrease until the
-    // fixpoint: an unchanged sum proves an unchanged labeling. One narrow
-    // aggregate over the already-checkpointed round result replaces the old
-    // per-round shuffle join + isEmpty action. decimal(38,0) cannot overflow
-    // (10^11 ids x 2^63 < 10^38).
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("comp").cast("decimal(38,0)"))).collect()(0).getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val prop = edges.join(labels, edges("a") === labels("id"))
-        .select(edges("b").as("id"), col("comp"))
-      val next = labels.unionByName(prop)
-        .groupBy("id").agg(min("comp").as("comp")).localCheckpoint()
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      iter += 1
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    val budget = graft.BroadcastBudget.rows(edges.schema)
+    def solved(rounds: Int, inMemory: Boolean, labels: DataFrame): DataFrame = {
+      PipelineMetrics.recordClusters(PipelineMetrics.ClusterStats(rounds, inMemory))
+      labels
     }
-    require(converged, s"dupClusters did not converge in $maxIter rounds " +
-      "(component diameter exceeds maxIter) — raise maxIter")
-    labels.select(col("id").as("doc_id"), col("comp").as("cluster"))
+    def onDriver(rounds: Int, es: Array[(Long, Long)]): DataFrame =
+      solved(rounds, inMemory = true, componentMinima(es).toDF("doc_id", "cluster"))
+
+    // undirected, deduplicated, oriented a < b; self-pairs ride along
+    // unchanged so a doc paired only with itself keeps its label
+    lazy val all = edges.select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+      .distinct().localCheckpoint()
+    lazy val loops = all.filter(col("a") === col("b"))
+
+    @annotation.tailrec
+    def round(ee: DataFrame, rounds: Int): DataFrame = {
+      // every edge from each end, with its node's neighbourhood minimum
+      // (self included) and whether the node breaks the star-forest
+      // fixpoint: more than one smaller neighbour, or a smaller AND a
+      // larger one
+      val byId = Window.partitionBy("id")
+      val nbrs = ee.select(col("a").as("id"), col("b").as("nbr"))
+        .unionByName(ee.select(col("b").as("id"), col("a").as("nbr")))
+        .select(col("id"), col("nbr"),
+          least(col("id"), min(col("nbr")).over(byId)).as("m"),
+          (sum(when(col("nbr") < col("id"), 1L).otherwise(0L)).over(byId) > 1 ||
+            (min(col("nbr")).over(byId) < col("id") && max(col("nbr")).over(byId) > col("id")))
+            .as("bad"))
+      // nbrs holds every edge row twice, once from each end
+      val check = nbrs.agg(count(lit(1)), coalesce(max(col("bad")), lit(false))).collect()(0)
+      if (!check.getBoolean(1))
+        solved(rounds, inMemory = false,
+          nbrs.select(col("id").as("doc_id"), col("m").as("cluster")).distinct())
+      else if (check.getLong(0) / 2 <= budget) onDriver(rounds, ee.as[(Long, Long)].collect())
+      else {
+        // large-star: each edge (u > v) becomes (u, m(v)); small-star: each
+        // node u, now above all its neighbours, links them and itself to
+        // its smallest neighbour mu
+        val large = nbrs.filter(col("nbr") > col("id")).select(col("nbr").as("u"), col("m").as("v"))
+          .withColumn("mu", min(col("v")).over(Window.partitionBy("u")))
+        val small = large.select(explode(array(
+            struct(col("mu").as("a"), col("v").as("b")),
+            struct(col("mu").as("a"), col("u").as("b")))).as("e"))
+          .select("e.*").filter(col("a") =!= col("b"))
+        round(small.unionByName(loops).distinct().localCheckpoint(), rounds + 1)
+      }
+    }
+
+    val head =
+      if (budget < 0) Array.empty[(Long, Long)]
+      else edges.limit(math.min(budget + 1, Int.MaxValue).toInt).as[(Long, Long)].collect()
+    if (budget >= 0 && head.length <= budget) onDriver(0, head) else round(all, 0)
+  }
+
+  /** Union-find over `edges`, the larger root always linked under the
+    * smaller, so every root is its component's minimum: (node, minimum) for
+    * every node that appears in an edge. */
+  private def componentMinima(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var y = x // path compression
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(math.min(ra, rb)) = math.min(ra, rb)
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x))
   }
 
   /** 48-bit SimHash per doc from term tfs: bit j of the fingerprint is

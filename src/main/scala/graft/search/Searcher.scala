@@ -570,8 +570,9 @@ final class Searcher(spark: SparkSession, indexPath: String,
     * docFreq until a purging merge, exactly the reference semantics), so a
     * repeated term costs ZERO Spark jobs after its first lookup. `None`
     * records ABSENT terms too (a miss is as cacheable as a hit). Insertion
-    * stops at [[Searcher.TermStatsCacheMax]] entries so an adversarial
-    * expansion stream cannot grow the driver unboundedly. */
+    * stops at [[Searcher.TermStatsCacheMax]] entries — a hard bound, also
+    * under concurrent queries — so an adversarial expansion stream cannot
+    * grow the driver unboundedly. */
   @transient private lazy val termStatsCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Option[(Long, Long)]]()
 
@@ -579,8 +580,12 @@ final class Searcher(spark: SparkSession, indexPath: String,
     if (keys.isEmpty) return Map.empty
     val missing = keys.filterNot(termStatsCache.containsKey)
     val fetched = fetchFieldTermStats(missing)
-    if (missing.nonEmpty && termStatsCache.size() < Searcher.TermStatsCacheMax)
-      missing.foreach(k => termStatsCache.put(k, fetched.get(k)))
+    // inserts take the map's lock and check the bound per key, so
+    // concurrent batches cannot overshoot it; reads stay lock-free
+    if (missing.nonEmpty) termStatsCache.synchronized {
+      missing.iterator.takeWhile(_ => termStatsCache.size() < Searcher.TermStatsCacheMax)
+        .foreach(k => termStatsCache.putIfAbsent(k, fetched.get(k)))
+    }
     keys.iterator.flatMap { k =>
       (termStatsCache.get(k) match {
         case null => fetched.get(k)

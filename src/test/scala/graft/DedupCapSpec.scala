@@ -5,8 +5,8 @@ import graft.pipeline.{Dedup, PipelineMetrics}
 
 /** Bucket-cap guard after the r6 optimization: the fast path collects the
   * (rare) over-cap bucket keys and anti-joins them out; beyond the driver
-  * bound the aggregate + semi-join fallback runs. Both must keep the same
-  * rows and surface the same drop accounting.
+  * bound the keys stay distributed. Both must keep the same rows and
+  * surface the same drop accounting.
   */
 class DedupCapSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -56,5 +56,24 @@ class DedupCapSpec extends AnyFunSuite {
     assert(capped == Set((1L, 2L)))
     val d = PipelineMetrics.lastDrops("lshCandidates")
     assert(d.buckets >= 1L && d.rows >= 20L)
+  }
+
+  test("null bucket keys: both paths keep them and count only dropped rows") {
+    // three null-key rows would form an over-cap "bucket" if nulls grouped
+    val nulls = Seq((900L, None), (901L, None), (902L, None))
+    def kept(rows: Seq[(Long, Option[Long])], cap: Int): Set[Long] =
+      Dedup.dropOverCap(rows.toDF("id", "k"), Seq("k"), cap, "nullKeys")
+        .select("id").collect().map(_.getLong(0)).toSet
+    // fast path: bucket 7 (3 rows) over cap 2, bucket 9 (2 rows) under it
+    val small = Seq(0L -> Some(7L), 1L -> Some(7L), 2L -> Some(7L),
+      10L -> Some(9L), 11L -> Some(9L)) ++ nulls
+    assert(kept(small, 2) == Set(10L, 11L, 900L, 901L, 902L))
+    assert(PipelineMetrics.lastDrops("nullKeys") == PipelineMetrics.DropStats(1L, 3L))
+    // fallback: MaxDriverOverKeys + 1 two-row buckets over cap 1
+    val over = Dedup.MaxDriverOverKeys + 1
+    val many = (0 until over).flatMap(b => Seq((2L * b) -> Some(b.toLong), (2L * b + 1) -> Some(b.toLong))) ++
+      Seq(999999L -> Some(-1L)) ++ nulls
+    assert(kept(many, 1) == Set(999999L, 900L, 901L, 902L))
+    assert(PipelineMetrics.lastDrops("nullKeys") == PipelineMetrics.DropStats(over.toLong, 2L * over))
   }
 }
