@@ -19,7 +19,7 @@ object Bench {
   }
 
   /** Median of `n` trials — single-JVM walls have ±40% noise; medians are the
-    * honest protocol (VERDICT r1 / PLAN_r2 note). Even counts take the upper
+    * honest protocol (VERDICT r1). Even counts take the upper
     * (slower) middle wall — conservative, never best-of-N in disguise. */
   def timeMedian[A](n: Int)(f: => A): Double = {
     val ts = (1 to n).map(_ => time(f)).sorted

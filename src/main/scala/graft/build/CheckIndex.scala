@@ -9,7 +9,8 @@ import graft.model._
   * (/root/reference/src/Lucene.Net.Core/Index/CheckIndex.cs:55,464,798-806,1587):
   * per posting list df/ttf consistency, strictly-increasing docIds, docIds
   * within [0, maxDoc), positions consistent with tf, field lengths matching
-  * the docs table, and stats-table row counts. Distributed: each check is a
+  * the docs table, and every stats row against the docs and postings it
+  * summarizes (maxDoc, sumDocFreq, sumTotalTermFreq). Distributed: each check is a
   * Spark aggregation; the report is a small collected summary.
   */
 object CheckIndex {
@@ -23,10 +24,9 @@ object CheckIndex {
     import spark.implicits._
     val violations = scala.collection.mutable.ArrayBuffer.empty[String]
 
-    val stats = spark.read.parquet(IndexBuilder.statsPath(spark, indexPath))
-      .filter(col("field") === IndexBuilder.DefaultField)
-      .dropDuplicates("segmentId").as[SegmentStats]
-    val segMaxDoc = stats.collect().map(s => s.segmentId -> s.maxDoc).toMap
+    val stats = IndexBuilder.readStats(spark, indexPath)
+    val segMaxDoc = stats.filter(_.field == IndexBuilder.DefaultField)
+      .map(s => s.segmentId -> s.maxDoc).toMap
     // the committed stats define the live segment set (segments_N analog)
     val live = segMaxDoc.keySet
     val docs = spark.read.parquet(IndexBuilder.docsPath(indexPath))
@@ -98,9 +98,9 @@ object CheckIndex {
     // docs-table consistency: docIds dense per segment, maxDoc matches stats
     val segDocs = docs.groupBy("segmentId")
       .agg(count(lit(1)).as("n"), max("docId").as("maxId"), min("docId").as("minId"),
-        countDistinct("docId").as("nd"))
-      .as[(Int, Long, Int, Int, Long)].collect()
-    segDocs.foreach { case (seg, n, maxId, minId, nd) =>
+        countDistinct("docId").as("nd"), sum("fieldLen").as("len"))
+      .as[(Int, Long, Int, Int, Long, Long)].collect()
+    segDocs.foreach { case (seg, n, maxId, minId, nd, _) =>
       if (minId != 0) violations += s"seg=$seg: min docId $minId != 0"
       if (maxId != n - 1) violations += s"seg=$seg: max docId $maxId != n-1 ${n - 1}"
       if (nd != n) violations += s"seg=$seg: duplicate docIds"
@@ -111,16 +111,25 @@ object CheckIndex {
       }
     }
 
-    // cross-check sumTotalTermFreq == sum(fieldLen)
-    val lenBySeg = docs.groupBy("segmentId").agg(sum("fieldLen").as("s"))
-      .as[(Int, Long)].collect().toMap
-    segMaxDoc.keys.foreach { seg =>
-      val st = stats.filter(col("segmentId") === seg).as[SegmentStats].collect().headOption
-      (st, lenBySeg.get(seg)) match {
-        case (Some(s), Some(l)) if s.sumTotalTermFreq != l =>
-          violations += s"seg=$seg: sumTotalTermFreq ${s.sumTotalTermFreq} != sum(fieldLen) $l"
-        case _ =>
-      }
+    // every stats row against the data it summarizes: sumDocFreq is the
+    // field's posting-row count; sumTotalTermFreq is Σ fieldLen of the docs
+    // for the default field and Σ ttf of the postings for every other field
+    val lenBySeg = segDocs.map(d => d._1 -> d._6).toMap
+    val postBySegField = postings.groupBy("segmentId", "field")
+      .agg(count(lit(1)), sum("ttf"))
+      .as[(Int, String, Long, Long)].collect()
+      .map { case (seg, f, n, ttf) => (seg, f) -> (n, ttf) }.toMap
+    stats.foreach { s =>
+      val where = s"seg=${s.segmentId} field=${s.field}"
+      val (rows, ttf) = postBySegField.getOrElse((s.segmentId, s.field), (0L, 0L))
+      if (s.sumDocFreq != rows)
+        violations += s"$where: sumDocFreq ${s.sumDocFreq} != posting rows $rows"
+      if (s.field != IndexBuilder.DefaultField && s.sumTotalTermFreq != ttf)
+        violations += s"$where: sumTotalTermFreq ${s.sumTotalTermFreq} != sum(ttf) $ttf"
+      if (s.field == IndexBuilder.DefaultField)
+        lenBySeg.get(s.segmentId).filter(_ != s.sumTotalTermFreq).foreach { l =>
+          violations += s"$where: sumTotalTermFreq ${s.sumTotalTermFreq} != sum(fieldLen) $l"
+        }
     }
 
     // term vectors (when present): every vector doc must exist in the doc

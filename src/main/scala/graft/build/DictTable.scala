@@ -1,6 +1,6 @@
 package graft.build
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,12 +8,20 @@ import org.apache.spark.sql.functions._
   * BlockTree/.tip term-index analog (SURVEY.md §2.3 "Term dictionary"): at
   * query time, term stats come from this small pruned table instead of a
   * scan over every segment's postings metadata. One term-shuffle at build
-  * time; df/ttf are invariant under merges.
+  * time.
   *
   * Freshness contract: the dictionary is valid only while the segment set it
-  * was computed from matches the live stats table (signature check). A
-  * streaming append changes the set -> readers silently fall back to the
-  * postings-scan path; the next batch build or explicit refresh rewrites it.
+  * was computed from matches the live stats table (the marker holds that
+  * set's signature). A streaming append changes the set -> readers silently
+  * fall back to the postings-scan path; the next batch build or explicit
+  * refresh rewrites it. Rewrites of existing docs (merge, sorted merge,
+  * split) follow one carry-or-rebuild rule: df/ttf depend only on WHICH docs
+  * are live, not on how they are segmented, so a rewrite that drops no live
+  * doc (Σ rewritten docs = Σ source maxDoc) from a source whose marker is
+  * valid keeps the dictionary — a merge re-stamps the marker, a split copies
+  * `dict` and `dict_grams` ([[carry]]). Every other rewrite rebuilds it
+  * from the stats it just committed ([[write]]), except that a merge leaves
+  * a dictionary that was already stale as it is.
   */
 object DictTable {
 
@@ -31,60 +39,38 @@ object DictTable {
     else Array.tabulate(cps.length - 1)(i => (new String(cps, i, 2), i))
   }
 
-  /** [[segsSignature]] computed from ALREADY-COLLECTED stats rows — callers
-    * holding the live stats in memory (merge, split) avoid re-reading the
-    * stats table just to stamp the marker. Identical string: default-field
-    * rows deduped by segmentId, (id:maxDoc) sorted by id. */
+  /** Signature of the segment set of `stats`, the rows a caller holds:
+    * default-field rows deduped by segmentId, (id:maxDoc) sorted by id. */
   def segsSignatureOf(stats: Seq[graft.model.SegmentStats]): String =
     stats.filter(_.field == IndexBuilder.DefaultField)
       .map(s => s.segmentId -> s.maxDoc).toMap.toSeq
       .sortBy(_._1).map { case (s, m) => s"$s:$m" }.mkString(",")
 
-  /** Signature of the live segment set (ids + maxDocs from stats). */
-  def segsSignature(spark: SparkSession, indexPath: String): String = {
-    import spark.implicits._
-    try {
-      spark.read.parquet(IndexBuilder.statsPath(spark, indexPath))
-        .filter(col("field") === IndexBuilder.DefaultField)
-        .dropDuplicates("segmentId")
-        .select("segmentId", "maxDoc").as[(Int, Long)].collect()
-        .sortBy(_._1).map { case (s, m) => s"$s:$m" }.mkString(",")
-    } catch { case _: Exception => "" }
-  }
+  /** Signature of the live segment set, from one read of the stats table. */
+  def segsSignature(spark: SparkSession, indexPath: String): String =
+    try segsSignatureOf(IndexBuilder.readStats(spark, indexPath))
+    catch { case _: Exception => "" }
 
-  def write(spark: SparkSession, indexPath: String): Unit =
-    write(spark, indexPath, None)
+  /** Dictionaries whose term bound (Σ sumDocFreq) is at most this many rows
+    * are written as ONE globally sorted file — tighter row-group pruning, no
+    * range-partitioner sampling job, no small-file spray; larger ones keep
+    * the sampled repartitionByRange that spreads the sort across the
+    * cluster. The gram index goes single-file below an eighth of it. */
+  private val SingleFileMaxTerms = 1000000L
 
-  /** Refresh dictionary + gram index. `postingsProj` is an optional
-    * already-read (segmentId, field, term, df, ttf) projection of the LIVE
-    * postings (e.g. pinned by a caller that just aggregated its own stats
-    * from it) — passing it avoids a second full read of the postings table.
-    *
-    * Layout is SCALE-ADAPTIVE: the stats table's summed sumDocFreq bounds
-    * the dictionary row count from above; small dictionaries (bound <=
-    * spark.graft.dict.singleFileMaxTerms, default 1M) write ONE globally
-    * sorted file — tighter row-group pruning, no range-partitioner sampling
-    * job, no small-file spray — while large ones keep the sampled
-    * repartitionByRange that spreads the sort across the cluster. */
+  /** Refresh dictionary + gram index of the segment set `stats` — the LIVE
+    * stats rows the caller holds (just committed, or read once): they give
+    * the live set, the marker signature and the term bound, so the refresh
+    * reads no stats table. One read of those segments' postings. */
   def write(spark: SparkSession, indexPath: String,
-            postingsProj: Option[DataFrame]): Unit = {
-    import spark.implicits._
-    val sig = segsSignature(spark, indexPath)
+            stats: Seq[graft.model.SegmentStats]): Unit = {
+    val sig = segsSignatureOf(stats)
     if (sig.isEmpty) return
-    // live segment set + dictionary-size bound from ONE read of the tiny
-    // committed stats table (orphan dirs excluded)
-    val statRows = spark.read.parquet(IndexBuilder.statsPath(spark, indexPath))
-      .select(col("segmentId"), coalesce(col("sumDocFreq"), lit(0L)).as("sdf"))
-      .as[(Int, Long)].collect()
-    val live = statRows.map(_._1).toSet
-    val termBound = statRows.map(_._2).sum
-    val singleFileMax =
-      spark.conf.getOption("spark.graft.dict.singleFileMaxTerms")
-        .map(_.toLong).getOrElse(1000000L)
-    val src = postingsProj.getOrElse(
-      spark.read.parquet(IndexBuilder.postingsPath(indexPath))
-        .select(col("segmentId"), col("field"), col("term"), col("df"), col("ttf")))
-    val dict0 = src
+    val live = stats.map(_.segmentId).toSet
+    val termBound = stats.map(_.sumDocFreq).sum
+    // the five columns read, with their known types: no footer-inference job
+    val dict0 = spark.read.schema("segmentId INT, field STRING, term STRING, df INT, ttf BIGINT")
+      .parquet(IndexBuilder.postingsPath(indexPath))
       .filter(col("segmentId").isInCollection(live))
       .select("field", "term", "df", "ttf")
       .groupBy("field", "term")
@@ -98,9 +84,11 @@ object DictTable {
       // walk (Util/Automaton/LevenshteinAutomata.cs). Terms stay sorted
       // within each length slice, keeping prefix-family stats usable too.
       .withColumn("len", length(col("term")).cast("int"))
+    // a single-file dictionary coalesces the aggregate's own output into
+    // one task (a small table by the bound) instead of shuffling it again
     val dict =
-      if (termBound <= singleFileMax)
-        dict0.repartition(1).sortWithinPartitions("field", "len", "term")
+      if (termBound <= SingleFileMaxTerms)
+        dict0.coalesce(1).sortWithinPartitions("field", "len", "term")
       else
         dict0.repartitionByRange(col("field"), col("len"), col("term"))
           .sortWithinPartitions("field", "len", "term")
@@ -114,9 +102,34 @@ object DictTable {
         pinned.write.mode(SaveMode.Overwrite).parquet(dictPath(indexPath))
         spark.catalog.refreshByPath(dictPath(indexPath))
       },
-      () => writeGramsFrom(spark, indexPath, pinned, termBound <= singleFileMax / 8)))
+      () => writeGrams(spark, indexPath, pinned, termBound <= SingleFileMaxTerms / 8)))
     finally pinned.unpersist()
     writeMarker(spark, indexPath, sig)
+  }
+
+  /** Carry the dictionary and gram index of `srcPath` (live stats
+    * `srcStats`) to `dstPath`, a rewrite of the same live docs whose stats
+    * are `dstStats` — the caller checked that no doc dropped. Only a fresh
+    * and complete source is carried: its marker matches `srcStats` and both
+    * tables exist. The files are copied (IndexSplitter copies rather than
+    * recomputes) and the marker stamped with the destination's signature.
+    * Returns whether it carried. */
+  def carry(spark: SparkSession, srcPath: String, srcStats: Seq[graft.model.SegmentStats],
+            dstPath: String, dstStats: Seq[graft.model.SegmentStats]): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(srcPath).getFileSystem(conf)
+    if (!readMarker(spark, srcPath).contains(segsSignatureOf(srcStats)) ||
+        !fs.exists(new Path(dictPath(srcPath))) || !fs.exists(new Path(gramsPath(srcPath))))
+      return false
+    Seq(dictPath _, gramsPath _).foreach { table =>
+      val (from, to) = (new Path(table(srcPath)), new Path(table(dstPath)))
+      val (srcFs, dstFs) = (from.getFileSystem(conf), to.getFileSystem(conf))
+      if (dstFs.exists(to)) dstFs.delete(to, true)
+      require(FileUtil.copy(srcFs, from, dstFs, to, false, conf), s"copy $from -> $to failed")
+      spark.catalog.refreshByPath(table(dstPath))
+    }
+    writeMarker(spark, dstPath, segsSignatureOf(dstStats))
+    true
   }
 
   /** Positional-bigram inverted index over the dictionary — the columnar
@@ -132,13 +145,11 @@ object DictTable {
     * least max(|s|,|t|) - 1 - 2e positional bigrams within position
     * distance e. Storage is ~(len-1) rows per term — the dictionary is
     * orders of magnitude smaller than postings, so the overhead is noise.
+    * A single-file gram table comes from a single-file dictionary, whose
+    * one partition it keeps.
     */
-  def writeGrams(spark: SparkSession, indexPath: String): Unit =
-    writeGramsFrom(spark, indexPath,
-      spark.read.parquet(dictPath(indexPath)), singleFile = false)
-
-  private def writeGramsFrom(spark: SparkSession, indexPath: String,
-                             dictDf: DataFrame, singleFile: Boolean): Unit = {
+  private def writeGrams(spark: SparkSession, indexPath: String,
+                         dictDf: DataFrame, singleFile: Boolean): Unit = {
     import spark.implicits._
     val grams = dictDf
       .select("field", "term", "df", "ttf", "len").as[(String, String, Long, Long, Int)]
@@ -148,7 +159,7 @@ object DictTable {
       .toDF("field", "gram", "pos", "term", "df", "ttf", "len")
     val laid =
       if (singleFile)
-        grams.repartition(1).sortWithinPartitions("field", "gram", "term", "pos")
+        grams.coalesce(1).sortWithinPartitions("field", "gram", "term", "pos")
       else
         grams.repartitionByRange(col("field"), col("gram"), col("term"))
           .sortWithinPartitions("field", "gram", "term", "pos")

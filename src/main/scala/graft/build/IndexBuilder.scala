@@ -1,6 +1,6 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.analysis.Analyzers
 import graft.model._
@@ -197,33 +197,20 @@ object IndexBuilder {
       .write.mode(mode).parquet(bloomsPath(indexPath))
   }
 
-  /** Per-segment, per-field stats (CollectionStatistics analog,
-    * Search/CollectionStatistics.cs:32-37) from `segDocs` (segmentId,
-    * maxDoc, defaultSttf) and the segments' `postings` rows: maxDoc is
-    * segment-wide; the default field's sumTotalTermFreq comes from
-    * docs.fieldLen (unchanged legacy semantics), extra fields' from their
-    * postings' ttf sums. */
-  private[graft] def segmentStats(segDocs: DataFrame, postings: DataFrame,
-                                  fieldNames: Seq[String]): Array[SegmentStats] = {
-    val spark = segDocs.sparkSession
-    import spark.implicits._
-    val segFieldTerms = postings
-      .groupBy(col("segmentId"), col("field"))
-      .agg(count(lit(1)).as("sumDocFreq"), sum(col("ttf")).as("postSttf"))
-    segDocs.crossJoin(fieldNames.toDF("field"))
-      .join(segFieldTerms, Seq("segmentId", "field"), "left")
-      .select(col("segmentId").cast("int").as("segmentId"), col("field"),
-        col("maxDoc").cast("long").as("maxDoc"),
-        when(col("field") === DefaultField, col("defaultSttf"))
-          .otherwise(coalesce(col("postSttf"), lit(0L)))
-          .cast("long").as("sumTotalTermFreq"),
-        coalesce(col("sumDocFreq"), lit(0L)).cast("long").as("sumDocFreq"))
-      .as[SegmentStats].collect()
-  }
-
   /** Resolved path of the CURRENT stats generation. */
   def statsPath(spark: SparkSession, base: String): String =
     s"$base/${statsDirOf(spark, base, statsGen(spark, base))}"
+
+  /** The live stats rows, one per (segmentId, field) as every reader
+    * dedupes them: one scan of the tiny committed table, read with its known
+    * schema (no footer-inference job) and deduped on the driver. */
+  def readStats(spark: SparkSession, base: String): Array[SegmentStats] = {
+    import spark.implicits._
+    spark.read.schema(Encoders.product[SegmentStats].schema).parquet(statsPath(spark, base))
+      .as[SegmentStats].collect()
+      .groupBy(s => (s.segmentId, s.field)).values.map(_.head).toArray
+      .sortBy(s => (s.segmentId, s.field))
+  }
 
   /** Build the index from a pages DataFrame with columns (url string, text string).
     * Resume-safe: segments recorded in the manifest are skipped.
@@ -239,34 +226,36 @@ object IndexBuilder {
     // persist analyzer/numSegments so the query path can't diverge from the build
     writeConfig(spark, indexPath, cfg)
 
-    var totalDocs = 0L
-    groups.foreach { group =>
-      totalDocs += buildGroup(spark, pages, indexPath, cfg, group.toSet, done)
-    }
+    val written = groups.flatMap(g => buildGroup(spark, pages, indexPath, cfg, g.toSet, done))
+    val totalDocs = written.filter(_.field == DefaultField).map(_.maxDoc).sum
     // refresh the global term dictionary (BlockTree/.tip analog) — one
     // term-shuffle over (term, df, ttf); readers fall back to postings scans
-    // whenever this is stale, so the refresh is an optimization, not a gate
-    DictTable.write(spark, indexPath)
+    // whenever this is stale, so the refresh is an optimization, not a gate.
+    // A fresh build's live set is exactly what it just wrote; only a resumed
+    // one reads the committed stats for the segments it skipped.
+    DictTable.write(spark, indexPath, if (done.isEmpty) written else readStats(spark, indexPath).toSeq)
     val elapsed = (System.nanoTime() - t0) / 1e9
     val report = BuildReport(totalDocs, cfg.numSegments, elapsed, totalDocs / math.max(elapsed, 1e-9))
     report
   }
 
   private def buildGroup(spark: SparkSession, pages: DataFrame, indexPath: String,
-                         cfg: BuildConfig, group: Set[Int], alreadyDone: Set[Int]): Long = {
+                         cfg: BuildConfig, group: Set[Int], alreadyDone: Set[Int]): Seq[SegmentStats] = {
     val nSeg = cfg.numSegments
     val inGroup = pages
       .withColumn("segmentId",
         graft.functions.ScalarExpressions.segmentOf(col("url"), nSeg))
       .filter(col("segmentId").isInCollection(group -- alreadyDone))
     writeSegments(spark, inGroup, indexPath, cfg.analyzerName, cfg.boost, cfg.flushTokens,
-      group, cfg.extraFields, cfg.termVectors, cfg.indexSort, cfg.indexOffsets,
+      group -- alreadyDone, cfg.extraFields, cfg.termVectors, cfg.indexSort, cfg.indexOffsets,
       cfg.bloomFilter)
   }
 
   /** Write one group of segments from a pages DataFrame that already carries
     * a `segmentId` column (shared by the batch builder and the streaming
-    * incremental indexer). Commits docs+postings+stats, then the manifest.
+    * incremental indexer). Commits docs+postings+stats, then the manifest,
+    * and returns the stats rows it committed: they are tallied from the
+    * rows the two writes emit ([[WriteStats]]), not read back.
     */
   def writeSegments(spark: SparkSession, inGroup: DataFrame, indexPath: String,
                     analyzerName: String, boost: Float, flushTokens: Int,
@@ -274,7 +263,7 @@ object IndexBuilder {
                     termVectors: Boolean = false,
                     indexSort: Option[String] = None,
                     indexOffsets: Boolean = false,
-                    bloomFilter: Boolean = false): Long = {
+                    bloomFilter: Boolean = false): Seq[SegmentStats] = {
     import spark.implicits._
     val tg0 = System.nanoTime()
     val fieldSpecs: Seq[(String, String)] = (DefaultField -> analyzerName) +: extraFields
@@ -300,6 +289,11 @@ object IndexBuilder {
       .sortWithinPartitions(col("segmentId"), col("sortKey"), col("url"))
       .as[(String, Seq[String], Int, Double)]
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+    // stats ride the two writes: posting rows and Σ ttf per (segment,
+    // field), docs and Σ fieldLen per segment, tallied in the write stages
+    val postTally = WriteStats.tally(spark, "postings")
+    val docTally = WriteStats.tally(spark, "docs")
 
     // postings: per-partition in-memory segment build (SegmentWriter - the
     // DWPT/TermsHash analog): tokens go straight into primitive buffers,
@@ -334,7 +328,12 @@ object IndexBuilder {
         }
 
         override def hasNext: Boolean = { refill(); queue.hasNext }
-        override def next(): PostingRow = { refill(); queue.next() }
+        override def next(): PostingRow = {
+          refill()
+          val r = queue.next()
+          postTally.add(r.segmentId, r.field, r.ttf)
+          r
+        }
       }
     }
     // postings and docs jobs share the pages shuffle and are independent:
@@ -359,6 +358,7 @@ object IndexBuilder {
         docId += 1
         val text = vals.head
         val len = analyzer.tokenCount(if (text == null) "" else text)
+        docTally.add(seg, DefaultField, len)
         (DocRow(seg, docId, url, len, bm25.encodeNormValue(boost, len)), key)
       }
     }
@@ -398,18 +398,13 @@ object IndexBuilder {
       Seq(postingsJob _, docsJob _) ++ (if (termVectors) Seq(vectorsJob _) else Nil))
     finally sortedPages.unpersist()
 
-    // opt-in term blooms, then per-segment, per-field stats of the group
-    val groupPostings = spark.read.parquet(postingsPath(indexPath))
-      .filter(col("segmentId").isInCollection(group))
-    if (bloomFilter) writeBlooms(groupPostings, indexPath, SaveMode.Append)
+    if (bloomFilter)
+      writeBlooms(spark.read.parquet(postingsPath(indexPath))
+        .filter(col("segmentId").isInCollection(group)), indexPath, SaveMode.Append)
 
-    val segDocs = spark.read.parquet(docsPath(indexPath))
-      .filter(col("segmentId").isInCollection(group))
-      .groupBy(col("segmentId"))
-      .agg(count(lit(1)).as("maxDoc"), sum(col("fieldLen")).as("defaultSttf"))
-    val stats = segmentStats(segDocs, groupPostings, fieldNames)
-
-    val numDocs = stats.filter(_.field == DefaultField).map(_.maxDoc).sum
+    val segDocs = docTally.value.toSeq.map { case ((seg, _), (n, sttf)) => (seg, n, sttf) }
+    val stats = WriteStats.rows(segDocs, postTally.value, fieldNames)
+    val numDocs = segDocs.map(_._2).sum
 
     // append to the CURRENT stats generation, then re-check it: if a merge
     // committed a new generation while this append was in flight, the rows
@@ -419,13 +414,13 @@ object IndexBuilder {
     // deduped by every reader via dropDuplicates). Single-writer per index
     // is still the supported discipline for concurrent MERGES.
     var appendedGen = statsGen(spark, indexPath)
-    spark.createDataset(stats.toSeq).repartition(1).write.mode(SaveMode.Append)
+    spark.createDataset(stats).coalesce(1).write.mode(SaveMode.Append)
       .parquet(s"$indexPath/${statsDirOf(spark, indexPath, appendedGen)}")
     var tries = 0
     var cur = statsGen(spark, indexPath)
     while (cur != appendedGen && tries < 5) {
       appendedGen = cur
-      spark.createDataset(stats.toSeq).repartition(1).write.mode(SaveMode.Append)
+      spark.createDataset(stats).coalesce(1).write.mode(SaveMode.Append)
         .parquet(s"$indexPath/${statsDirOf(spark, indexPath, appendedGen)}")
       tries += 1
       cur = statsGen(spark, indexPath)
@@ -440,8 +435,8 @@ object IndexBuilder {
       ManifestRow(seg, "done", st.map(_.maxDoc).getOrElse(0L), st.map(_.sumDocFreq).getOrElse(0L),
         numDocs / math.max(elapsed, 1e-9), 1, now - (elapsed * 1000).toLong, now)
     }
-    spark.createDataset(manifest).repartition(1).write.mode(SaveMode.Append).parquet(manifestPath(indexPath))
-    numDocs
+    spark.createDataset(manifest).coalesce(1).write.mode(SaveMode.Append).parquet(manifestPath(indexPath))
+    stats
   }
 
   def completedSegments(spark: SparkSession, indexPath: String): Set[Int] = {

@@ -76,21 +76,14 @@ object MergeJob {
     // readers that resolved the previous generation finish their lazy reads
     purgeTombstones(spark, indexPath)
 
-    val statsAll = spark.read.parquet(IndexBuilder.statsPath(spark, indexPath))
-      .dropDuplicates("segmentId", "field")
-      .as[SegmentStats].collect()
-    // dictionary freshness from the stats just collected (the marker check
-    // needs only the signature — no second stats-table read)
-    val dictWasValid = graft.build.DictTable.readMarker(spark, indexPath)
-      .contains(graft.build.DictTable.segsSignatureOf(statsAll.toSeq))
+    val statsAll = IndexBuilder.readStats(spark, indexPath)
     // fresh id from the MERGE band (2^30+): disjoint from every source AND
     // from any future batch/streaming segment id (their bands are below)
     val mergeBand = statsAll.map(_.segmentId).filter(_ >= IndexBuilder.MergeIdOffset)
     val target =
       if (mergeBand.isEmpty) IndexBuilder.MergeIdOffset else mergeBand.max + 1
     if (sortedMerge)
-      return mergeSorted(spark, indexPath, srcSorted, target, statsAll,
-        dictWasValid, sortedPieceEntries)
+      return mergeSorted(spark, indexPath, srcSorted, target, statsAll, sortedPieceEntries)
 
     // segment-wide maxDoc from the default field's rows (present per segment)
     val stats = statsAll.filter(_.field == IndexBuilder.DefaultField)
@@ -127,6 +120,10 @@ object MergeJob {
     }
 
     val staging = s"$indexPath/.staging/merge_$target"
+    // the merged segment's stats ride its two writes (narrow docs pass,
+    // post-shuffle stitch): nothing is read back at commit
+    val docTally = graft.build.WriteStats.tally(spark, "docs")
+    val postTally = graft.build.WriteStats.tally(spark, "postings")
 
     // ---- docs: narrow rebase of the doc store (MergeDocIDRemapper analog)
     spark.read.parquet(IndexBuilder.docsPath(indexPath))
@@ -134,7 +131,11 @@ object MergeJob {
       .as[DocRow]
       .flatMap { d =>
         val nid = remapFn(d.segmentId, d.docId)
-        if (nid < 0) None else Some((nid, d.url, d.fieldLen, d.normByte))
+        if (nid < 0) None
+        else {
+          docTally.add(target, IndexBuilder.DefaultField, d.fieldLen)
+          Some((nid, d.url, d.fieldLen, d.normByte))
+        }
       }
       .toDF("docId", "url", "fieldLen", "normByte")
       .write.mode(SaveMode.Overwrite).parquet(s"$staging/docs")
@@ -236,7 +237,12 @@ object MergeJob {
             }
           }
           override def hasNext: Boolean = { fill(); out.nonEmpty }
-          override def next(): PostingRow = { fill(); out.dequeue() }
+          override def next(): PostingRow = {
+            fill()
+            val r = out.dequeue()
+            postTally.add(target, r.field, r.ttf)
+            r
+          }
         }
       }
 
@@ -263,7 +269,8 @@ object MergeJob {
         }
 
     commitMerged(spark, indexPath, srcSorted, target, statsAll, hasVectors,
-      dictWasValid, anyPurged = deleted.nonEmpty, lateMarkers = lateMarkers _)
+      anyPurged = deleted.nonEmpty, lateMarkers = lateMarkers _,
+      docTally.value.values.headOption.getOrElse((0L, 0L)), postTally.value)
     target
   }
 
@@ -299,50 +306,37 @@ object MergeJob {
       spark.catalog.refreshByPath(graft.build.TermVectors.vectorsPath(indexPath))
   }
 
-  /** Shared commit tail of both merge paths: recompute the merged segment's
-    * stats, flip the stats generation (THE commit), tombstone the superseded
-    * data, carry raced-in deletes forward, refresh the dictionary. */
+  /** Shared commit tail of both merge paths: the merged segment's stats
+    * from its writes' tallies (`docs` = (maxDoc, default-field sttf) after
+    * the purge, `postings` = rows and Σ ttf per (target, field)), flip the
+    * stats generation (THE commit), tombstone the superseded data, carry
+    * raced-in deletes forward, then keep or rebuild the dictionary. */
   private def commitMerged(spark: SparkSession, indexPath: String,
                            srcSorted: List[Int], target: Int,
                            statsAll: Array[SegmentStats], hasVectors: Boolean,
-                           dictWasValid: Boolean, anyPurged: Boolean,
+                           anyPurged: Boolean,
                            lateMarkers: () => Seq[(Int, Int)],
-                           /** (maxDoc, default-field sttf) of the merged
-                             * segment when the caller already aggregated
-                             * them (off its pinned sort) — skips the
-                             * re-read of the written doc store. */
-                           docStats: Option[(Long, Long)] = None): Unit = {
+                           docs: (Long, Long),
+                           postings: Map[(Int, String), (Long, Long)]): Unit = {
     import spark.implicits._
     val hadoopConf = spark.sparkContext.hadoopConfiguration
-    // ---- merged stats, recomputed from the merged segment's own data so
     // purged deletes decrement maxDoc/sumTotalTermFreq exactly like a
-    // reference merge
-    val postStats: Map[String, (Long, Long)] = spark.read
-      .parquet(IndexBuilder.postingsPath(indexPath))
-      .filter(col("segmentId") === target)
-      .groupBy("field").agg(count(lit(1)).as("rows"), sum("ttf").as("sttf"))
-      .as[(String, Long, Long)].collect()
-      .map { case (f, r, s) => f -> (r, s) }.toMap
-    val (mergedMaxDoc, mergedDefaultSttf) = docStats.getOrElse(spark.read
-      .parquet(IndexBuilder.docsPath(indexPath))
-      .filter(col("segmentId") === target)
-      .agg(count(lit(1)), coalesce(sum("fieldLen"), lit(0L)))
-      .as[(Long, Long)].first())
+    // reference merge, since the tallies count only what was written
     val srcFields = statsAll.filter(s => srcSorted.contains(s.segmentId)).map(_.field).distinct
-    val mergedStats = srcFields.map { f =>
-      val (rows, sttf) = postStats.getOrElse(f, (0L, 0L))
-      SegmentStats(target, f, mergedMaxDoc,
-        if (f == IndexBuilder.DefaultField) mergedDefaultSttf else sttf,
-        rows)
-    }
+    val mergedStats = graft.build.WriteStats.rows(Seq((target, docs._1, docs._2)), postings, srcFields)
     // RE-READ the live stats at commit time (not the snapshot from merge
     // start): segments appended concurrently by writeSegments carry forward
     // into the new generation instead of silently dropping out of the live
     // set (writeSegments has the matching re-append check on its side).
-    val statsNow = spark.read.parquet(IndexBuilder.statsPath(spark, indexPath))
-      .dropDuplicates("segmentId", "field")
-      .as[SegmentStats].collect()
+    val statsNow = IndexBuilder.readStats(spark, indexPath)
     val newStats = statsNow.filterNot(s => srcSorted.contains(s.segmentId)) ++ mergedStats
+    // the dictionary's freshness against the set this commit replaces: a
+    // segment appended since the last refresh has already made it stale
+    val dictWasValid = graft.build.DictTable.readMarker(spark, indexPath)
+      .contains(graft.build.DictTable.segsSignatureOf(statsNow.toSeq))
+    val srcMaxDoc = statsNow
+      .filter(s => s.field == IndexBuilder.DefaultField && srcSorted.contains(s.segmentId))
+      .map(_.maxDoc).sum
 
     // ---- THE COMMIT (object-store-safe segments_N protocol): the merged
     // stats generation is written as an ordinary parquet directory that
@@ -362,7 +356,7 @@ object MergeJob {
         IndexBuilder.statsDirOf(spark, indexPath, curGen))
     val newGen = curGen + 1
     val newDir = IndexBuilder.statsDirName(newGen)
-    spark.createDataset(newStats.toSeq).repartition(1).write.mode(SaveMode.Overwrite)
+    spark.createDataset(newStats.toSeq).coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$indexPath/$newDir")
     IndexBuilder.commitPointer(spark, indexPath, newGen, newDir) // THE commit
     spark.catalog.refreshByPath(s"$indexPath/$newDir")
@@ -396,16 +390,16 @@ object MergeJob {
     if (anyPurged || late.nonEmpty)
       graft.build.Deletes.pruneApplied(spark, indexPath)
 
-    // global df/ttf are invariant under merge WHEN nothing was purged: if the
-    // dictionary was fresh before, re-stamp it; a purging merge changes df,
-    // so the dictionary goes stale and readers fall back to postings scans
-    // until the next refresh. The marker signature comes from the newStats
-    // rows just committed — no extra stats-table read.
-    if (dictWasValid && !anyPurged) {
-      graft.build.DictTable.writeMarker(spark, indexPath,
-        graft.build.DictTable.segsSignatureOf(newStats.toSeq))
-    } else if (anyPurged && dictWasValid) {
-      graft.build.DictTable.write(spark, indexPath)
+    // the carry-or-rebuild rule (DictTable's freshness contract): global
+    // df/ttf are invariant under a merge that dropped no doc, so a fresh
+    // dictionary is re-stamped with the committed set's signature; a purging
+    // merge changes df, so the dictionary is rebuilt from the stats just
+    // committed. A dictionary that was stale before stays stale.
+    if (dictWasValid) {
+      if (docs._1 == srcMaxDoc)
+        graft.build.DictTable.writeMarker(spark, indexPath,
+          graft.build.DictTable.segsSignatureOf(newStats.toSeq))
+      else graft.build.DictTable.write(spark, indexPath, newStats.toSeq)
     }
   }
 
@@ -414,8 +408,7 @@ object MergeJob {
     * exactly like the concat path. */
   private def mergeSorted(spark: SparkSession, indexPath: String,
                           srcSorted: List[Int], target: Int,
-                          statsAll: Array[SegmentStats],
-                          dictWasValid: Boolean, pieceEntries: Int): Int = {
+                          statsAll: Array[SegmentStats], pieceEntries: Int): Int = {
     import spark.implicits._
     val staging = s"$indexPath/.staging/merge_$target"
 
@@ -452,11 +445,11 @@ object MergeJob {
         .select("newId").as[Int].collect()
         .toSeq.map(n => (target, n))
 
-    // merged doc stats come off the rewrite's pinned sort (commitMerged
-    // then skips its re-read of the written doc store)
-    val docStats = rw.segs.headOption.map(d => (d.maxDoc, d.defaultSttf)).getOrElse((0L, 0L))
+    // merged stats come off the rewrite: doc aggregates from its pinned
+    // sort, postings from its write's tally
+    val docs = rw.segs.headOption.map(d => (d.maxDoc, d.defaultSttf)).getOrElse((0L, 0L))
     commitMerged(spark, indexPath, srcSorted, target, statsAll, hasVectors,
-      dictWasValid, anyPurged, lateMarkers _, docStats = Some(docStats))
+      anyPurged, lateMarkers _, docs, rw.postings)
 
     val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(staging), true)
@@ -572,10 +565,9 @@ object MergeJob {
     var merges = 0
     var cont = true
     while (cont) {
-      val sizes = spark.read.parquet(IndexBuilder.statsPath(spark, indexPath))
-        .filter(col("field") === IndexBuilder.DefaultField)
-        .dropDuplicates("segmentId")
-        .as[SegmentStats].collect().map(s => s.segmentId -> s.maxDoc).toMap
+      val sizes = IndexBuilder.readStats(spark, indexPath)
+        .filter(_.field == IndexBuilder.DefaultField)
+        .map(s => s.segmentId -> s.maxDoc).toMap
       policy.findMerges(sizes) match {
         case m :: _ =>
           merge(spark, indexPath, m.sources)
@@ -600,7 +592,9 @@ object MergeJob {
     * (the sorted merge's primitive, with hash routing) instead of
     * re-running tokenization, the expensive stage at 100 TB. Deletes are
     * APPLIED: the split output starts tombstone-free. Term vectors and
-    * term blooms regenerate when the source carries them. Single-writer
+    * term blooms regenerate when the source carries them. The dictionary
+    * follows DictTable's carry-or-rebuild rule: copied when no doc dropped
+    * and the source's is fresh, rebuilt otherwise. Single-writer
     * discipline, like merges. Returns the live doc count.
     */
   def splitIndex(spark: SparkSession, srcPath: String, dstPath: String,
@@ -617,52 +611,47 @@ object MergeJob {
     val cfg = IndexBuilder.readConfig(spark, srcPath)
     IndexBuilder.writeConfig(spark, dstPath, cfg.copy(numSegments = parts))
 
-    val liveSrc = spark.read.parquet(IndexBuilder.statsPath(spark, srcPath))
-      .select("segmentId").distinct().as[Int].collect().toSet
+    val srcStats = IndexBuilder.readStats(spark, srcPath).toSeq
+    val liveSrc = srcStats.map(_.segmentId).toSet
     val routed = spark.read.parquet(IndexBuilder.docsPath(srcPath))
       .filter(col("segmentId").isInCollection(liveSrc))
       .join(graft.build.Deletes.deletedDf(spark, srcPath),
         Seq("segmentId", "docId"), "left_anti")
       .filter(docFilter)
       .withColumn("newSeg", graft.functions.ScalarExpressions.segmentOf(col("url"), parts))
-    val segs = SegmentRewrite.run(spark, srcPath, liveSrc, routed, dstPath,
-      withVectors = graft.build.TermVectors.enabled(spark, srcPath), pieceEntries).segs
+    val rw = SegmentRewrite.run(spark, srcPath, liveSrc, routed, dstPath,
+      withVectors = graft.build.TermVectors.enabled(spark, srcPath), pieceEntries)
 
     // term blooms regenerate when the source used them
     if (cfg.bloomFilter)
       IndexBuilder.writeBlooms(spark.read.parquet(IndexBuilder.postingsPath(dstPath)),
         dstPath, SaveMode.Overwrite)
 
-    // stats (generation 0 of the fresh index) + manifest, builder formula.
-    // The doc-store side (maxDoc, default sttf) comes from the rewrite's
-    // aggregate — off its pinned sort, no re-read of the written doc store;
-    // the postings side is ONE read of the written postings whose slim
-    // projection is pinned and SHARED with the dictionary refresh below.
-    val segDocs = segs.map(d => (d.newSeg, d.maxDoc, d.defaultSttf))
-      .toDF("segmentId", "maxDoc", "defaultSttf")
-    val postProj = spark.read.parquet(IndexBuilder.postingsPath(dstPath))
-      .select(col("segmentId").cast("int").as("segmentId"), col("field"),
-        col("term"), col("df"), col("ttf"))
-      .persist()
-    try {
-      val stats = IndexBuilder.segmentStats(segDocs, postProj,
-        IndexBuilder.DefaultField +: cfg.extraFields.map(_._1))
-      spark.createDataset(stats.toSeq).repartition(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dstPath/stats")
-      val numDocs = stats.filter(_.field == IndexBuilder.DefaultField).map(_.maxDoc).sum
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val now = System.currentTimeMillis()
-      val manifest = (0 until parts).map { seg =>
-        val st = stats.find(s => s.segmentId == seg && s.field == IndexBuilder.DefaultField)
-        graft.model.ManifestRow(seg, "done", st.map(_.maxDoc).getOrElse(0L),
-          st.map(_.sumDocFreq).getOrElse(0L), numDocs / math.max(elapsed, 1e-9),
-          1, now - (elapsed * 1000).toLong, now)
-      }
-      spark.createDataset(manifest).repartition(1).write.mode(SaveMode.Overwrite)
-        .parquet(IndexBuilder.manifestPath(dstPath))
-      graft.build.DictTable.write(spark, dstPath, Some(postProj))
-      numDocs
-    } finally postProj.unpersist()
+    // stats (generation 0 of the fresh index) + manifest, builder formula,
+    // straight from the rewrite: doc aggregates off its pinned sort, posting
+    // rows and Σ ttf tallied by its postings write
+    val stats = rw.stats(cfg.fieldList.map(_._1))
+    spark.createDataset(stats).coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(s"$dstPath/stats")
+    val numDocs = rw.segs.map(_.maxDoc).sum
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    val now = System.currentTimeMillis()
+    val manifest = (0 until parts).map { seg =>
+      val st = stats.find(s => s.segmentId == seg && s.field == IndexBuilder.DefaultField)
+      graft.model.ManifestRow(seg, "done", st.map(_.maxDoc).getOrElse(0L),
+        st.map(_.sumDocFreq).getOrElse(0L), numDocs / math.max(elapsed, 1e-9),
+        1, now - (elapsed * 1000).toLong, now)
+    }
+    spark.createDataset(manifest).coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(IndexBuilder.manifestPath(dstPath))
+    // the carry-or-rebuild rule (DictTable's freshness contract): re-
+    // segmenting the same live docs leaves every df/ttf unchanged, so a
+    // split that dropped no doc from a source with a fresh dictionary
+    // copies it; one that applied deletes or a docFilter rebuilds it
+    val srcMaxDoc = srcStats.filter(_.field == IndexBuilder.DefaultField).map(_.maxDoc).sum
+    if (numDocs != srcMaxDoc || !graft.build.DictTable.carry(spark, srcPath, srcStats, dstPath, stats))
+      graft.build.DictTable.write(spark, dstPath, stats)
+    numDocs
   }
 
   /** PKIndexSplitter analog

@@ -2,7 +2,7 @@ package graft.merge
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.build.{ConcurrentWrites, IndexBuilder, TermVectors}
+import graft.build.{ConcurrentWrites, IndexBuilder, TermVectors, WriteStats}
 import graft.codec.PostingsCodec
 import graft.model._
 
@@ -43,14 +43,21 @@ private[merge] object SegmentRewrite {
   /** Doc-side aggregate of one destination segment. */
   final case class SegDocs(newSeg: Int, maxDoc: Long, defaultSttf: Long)
 
-  /** `perm` is the (segmentId, docId, newSeg, newId) permutation table. */
-  final case class Result(segs: Seq[SegDocs], perm: DataFrame)
+  /** `perm` is the (segmentId, docId, newSeg, newId) permutation table;
+    * `postings` the written posting rows and Σ ttf per (newSeg, field). */
+  final case class Result(segs: Seq[SegDocs], postings: Map[(Int, String), (Long, Long)],
+                          perm: DataFrame) {
+    /** Stats rows of the written segments, one per field of `fields`. */
+    def stats(fields: Seq[String]): Seq[SegmentStats] =
+      WriteStats.rows(segs.map(d => (d.newSeg, d.maxDoc, d.defaultSttf)), postings, fields)
+  }
 
   /** Rewrite `routed` — live docs (segmentId, docId, newSeg, url, fieldLen,
     * normByte, and sortKey when the index is sorted) of the `sources`
     * segments of `srcPath` — into docs/postings (and vectors when
     * `withVectors`) under `dstPath`. Returns the per-segment doc aggregates
-    * (newSeg ascending) and the permutation. */
+    * (newSeg ascending), the postings tallied as the write emits them, and
+    * the permutation. */
   def run(spark: SparkSession, srcPath: String, sources: Iterable[Int],
           routed: DataFrame, dstPath: String, withVectors: Boolean,
           pieceEntries: Int): Result = {
@@ -116,6 +123,9 @@ private[merge] object SegmentRewrite {
           EntryRow(p.field, p.term, p.segmentId, d.docIds(i), d.tfs(i), ps, d.lens(i), pl, of)
         }
       }
+    // the encode runs in the postings write's result stage: its rows are
+    // tallied there for the stats
+    val postTally = WriteStats.tally(spark, "postings")
     val rows: Dataset[PostingRow] = entries.toDF()
       .join(perm, Seq("segmentId", "docId"))
       .select(col("newSeg"), col("field"), col("term"), col("newId"),
@@ -156,7 +166,11 @@ private[merge] object SegmentRewrite {
           }
           override def hasNext: Boolean = { advance(); nextRow != null }
           override def next(): PostingRow = {
-            advance(); val r = nextRow; nextRow = null; r
+            advance()
+            val r = nextRow
+            nextRow = null
+            postTally.add(r.segmentId, r.field, r.ttf)
+            r
           }
         }
       }
@@ -164,7 +178,7 @@ private[merge] object SegmentRewrite {
 
     ConcurrentWrites(spark,
       Seq(docsJob _) ++ (if (withVectors) Seq(vectorsJob _) else Nil) ++ Seq(postingsJob _))
-    Result(segAgg.toSeq.map(a => SegDocs(a._1, a._3, a._4)), permAll)
+    Result(segAgg.toSeq.map(a => SegDocs(a._1, a._3, a._4)), postTally.value, permAll)
   }
 
   /** Frame positions [from, to)'s payload slices as VByte(len)+bytes each —

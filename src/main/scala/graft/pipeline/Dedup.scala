@@ -302,10 +302,10 @@ object Dedup {
     *
     * Algorithm: one loop with a size exit, no round cap.
     *  - An edge set that fits Spark's broadcast budget
-    *    ([[graft.BroadcastBudget]]) is collected by one `limit(budget + 1)`
-    *    collect that also sizes it, and solved on the driver by
-    *    union-find; the labels come back as a local DataFrame, so
-    *    collecting them starts no job.
+    *    ([[graft.BroadcastBudget]]) is sized by a count, then collected and
+    *    solved on the driver by union-find (two jobs); the labels come back
+    *    as a local DataFrame, so collecting them starts no job. A larger
+    *    one ships only its count to the driver.
     *  - A larger one runs large-star + small-star rounds (Kiveris et al.,
     *    "Connected Components in MapReduce and Beyond", SoCC 2014): each
     *    round links every node's larger neighbours, then its smaller ones,
@@ -372,10 +372,12 @@ object Dedup {
       }
     }
 
-    val head =
-      if (budget < 0) Array.empty[(Long, Long)]
-      else edges.limit(math.min(budget + 1, Int.MaxValue).toInt).as[(Long, Long)].collect()
-    if (budget >= 0 && head.length <= budget) onDriver(0, head) else round(all, 0)
+    // size first, shipping counts only; the collect reuses the same RDD, so
+    // any shuffle under `pairs` runs once
+    val rows = edges.queryExecution.toRdd
+    if (budget >= 0 && rows.count() <= budget)
+      onDriver(0, rows.map(r => (r.getLong(0), r.getLong(1))).collect())
+    else round(all, 0)
   }
 
   /** Union-find over `edges`, the larger root always linked under the

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.SparkInternals
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
-import graft.build.{CheckIndex, Deletes, IndexBuilder, PagesGen}
+import graft.build.{CheckIndex, Deletes, DictTable, IndexBuilder, PagesGen}
 import graft.merge.MergeJob
 import graft.search._
 import java.nio.file.Files
@@ -71,6 +71,14 @@ class SplitIndexSpec extends AnyFunSuite {
     val ref = spark.read.parquet(IndexBuilder.statsPath(spark, s"${env._1}/ref"))
       .collect().map(_.toString).sorted
     assert(dst.sameElements(ref))
+  }
+
+  test("a split that applied deletes rebuilds the dictionary like the fresh build") {
+    val (dst, ref) = (s"${env._1}/dst", s"${env._1}/ref")
+    def rows(path: String) = spark.read.parquet(path).collect().map(_.toString).toSeq
+    assert(DictTable.isValid(spark, dst))
+    assert(rows(DictTable.dictPath(dst)) == rows(DictTable.dictPath(ref)))
+    assert(rows(DictTable.gramsPath(dst)) == rows(DictTable.gramsPath(ref)))
   }
 
   test("term, boolean and phrase results match the fresh build exactly") {
