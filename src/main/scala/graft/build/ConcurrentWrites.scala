@@ -1,5 +1,6 @@
 package graft.build
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import scala.concurrent.{Await, ExecutionContext, Future, Promise, blocking}
 import scala.concurrent.duration.Duration
@@ -10,7 +11,9 @@ import scala.concurrent.duration.Duration
   *
   * Fail-fast: every job the writes submit carries one fresh job tag; the
   * first failure cancels the tag (the siblings stop instead of running to
-  * completion against a commit that will never happen), and the call
+  * completion against a commit that will never happen), a job a sibling
+  * submits after that (its next AQE stage, the write itself) is cancelled
+  * as it starts, and the call
   * returns only after EVERY write has finished, so callers can release
   * their `persist()` pins in `finally` without racing a still-running
   * sibling. The first failure is rethrown.
@@ -22,6 +25,14 @@ private[graft] object ConcurrentWrites {
     val sc = spark.sparkContext
     val tag = s"graft-write-${java.util.UUID.randomUUID()}"
     val firstFailure = Promise[Throwable]()
+    val lateJobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (firstFailure.isCompleted && Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag)))
+          sc.cancelJob(e.jobId, "because a sibling write failed")
+    }
+    sc.addSparkListener(lateJobs)
     val futures = writes.map { w =>
       val f = Future {
         // job tags are thread-local and pool threads inherit their creator's:
@@ -35,7 +46,8 @@ private[graft] object ConcurrentWrites {
       }
       f
     }
-    futures.foreach(f => Await.ready(f, Duration.Inf))
+    try futures.foreach(f => Await.ready(f, Duration.Inf))
+    finally sc.removeSparkListener(lateJobs)
     // the failure callback may still be in flight after the last write ends
     if (futures.exists(_.value.exists(_.isFailure)))
       throw Await.result(firstFailure.future, Duration.Inf)

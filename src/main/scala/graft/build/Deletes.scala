@@ -3,6 +3,7 @@ package graft.build
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Document deletion — the IndexWriter.DeleteDocuments analog
   * (/root/reference/src/Lucene.Net.Core/Index/IndexWriter.cs:1591,1741):
@@ -84,16 +85,20 @@ object Deletes {
       .write.mode(SaveMode.Append).parquet(deletesPath(indexPath))
   }
 
+  /** The marker table's schema: every writer ([[deleteUrls]] off the doc
+    * store, [[deleteByQuery]] off `Hit`, [[appendMarkers]], the prune's
+    * rewrite) emits int columns. */
+  private val MarkerSchema = StructType(Seq(
+    StructField("segmentId", IntegerType), StructField("docId", IntegerType)))
+
   /** Distinct resolved markers as a DataFrame (segmentId, docId) — the
-    * distributed consumption path (anti-joins); empty frame when none. */
+    * distributed consumption path (anti-joins); empty frame when none. Read
+    * with the known schema: no footer-inference job. */
   def deletedDf(spark: SparkSession, indexPath: String): DataFrame =
     if (!exists(spark, indexPath)) {
       import spark.implicits._
       Seq.empty[(Int, Int)].toDF("segmentId", "docId")
-    } else spark.read.parquet(deletesPath(indexPath))
-      .select(col("segmentId").cast("int").as("segmentId"),
-        col("docId").cast("int").as("docId"))
-      .distinct()
+    } else spark.read.schema(MarkerSchema).parquet(deletesPath(indexPath)).distinct()
 
   /** Number of distinct markers — one tiny aggregate; readers use it to pick
     * broadcast-overlay vs anti-join consumption. */
@@ -120,18 +125,14 @@ object Deletes {
       .groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2).sorted }
   }
 
-  /** Drop markers of segments that are no longer live (their docs were
+  /** Drop markers of segments that are no longer `live` (their docs were
     * purged by a merge). Fully distributed (filter + write). Crash-safe
     * swap: the new content lands at `deletes_new` FIRST, so the only crash
     * window (between delete and rename) leaves a state [[recoverSwap]]
     * completes on the next read — deleted docs never resurrect.
     */
-  def pruneApplied(spark: SparkSession, indexPath: String): Unit = {
-    import spark.implicits._
+  def pruneApplied(spark: SparkSession, indexPath: String, live: Set[Int]): Unit = {
     if (!exists(spark, indexPath)) return
-    val live: Set[Int] = spark.read
-      .parquet(IndexBuilder.statsPath(spark, indexPath))
-      .select("segmentId").distinct().as[Int].collect().toSet
     // keep markers for segments whose data dirs are still on disk even if
     // no longer live: grace-window readers (previous stats generation) are
     // still scanning those dirs and must keep seeing their deletes — the

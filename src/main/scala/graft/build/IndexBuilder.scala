@@ -99,6 +99,20 @@ object IndexBuilder {
     out
   }
 
+  /** The postings table read with its known schema (no footer-inference
+    * job); an index written before the payload / offset streams reads those
+    * columns as null. */
+  def readPostings(spark: SparkSession, base: String): DataFrame =
+    spark.read.schema(Encoders.product[PostingRow].schema).parquet(postingsPath(base))
+
+  /** The doc store read with its known schema; `sorted` adds the index-sort
+    * key column (its presence is what marks a sorted index's docs). */
+  def readDocs(spark: SparkSession, base: String, sorted: Boolean): DataFrame = {
+    val schema = Encoders.product[DocRow].schema
+    spark.read.schema(if (sorted) schema.add("sortKey", "double") else schema)
+      .parquet(docsPath(base))
+  }
+
   def docsPath(base: String) = s"$base/docs"
   def postingsPath(base: String) = s"$base/postings"
   def bloomsPath(base: String) = s"$base/blooms"
@@ -470,7 +484,7 @@ object IndexBuilder {
       s"indexSort column '$c' must not contain ':', ',' or '\"'"))
     val json = s"""{"numSegments":${cfg.numSegments},"analyzer":"${cfg.analyzerName}",""" +
       s""""boost":${cfg.boost},"extraFields":"$extra","termVectors":${cfg.termVectors}""" +
-      s""","indexOffsets":${cfg.indexOffsets}""" +
+      s""","indexOffsets":${cfg.indexOffsets},"bloomFilter":${cfg.bloomFilter}""" +
       cfg.indexSort.map(c => s""","indexSort":"$c"""").getOrElse("") + "}"
     val path = new org.apache.hadoop.fs.Path(configPath(indexPath))
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -495,8 +509,9 @@ object IndexBuilder {
     }
     val vecs = json.contains(""""termVectors":true""")
     val offs = json.contains(""""indexOffsets":true""")
+    val blooms = json.contains(""""bloomFilter":true""")
     val isort = """"indexSort":"([^"]+)"""".r.findFirstMatchIn(json).map(_.group(1))
     BuildConfig(num, an, boost = boost, extraFields = extraFields, termVectors = vecs,
-      indexOffsets = offs, indexSort = isort)
+      indexOffsets = offs, indexSort = isort, bloomFilter = blooms)
   }
 }

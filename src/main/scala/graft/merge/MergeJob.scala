@@ -1,10 +1,9 @@
 package graft.merge
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.build.IndexBuilder
-import graft.codec.PostingsCodec
 import graft.model._
 
 /** Segment merge — the SegmentMerger analog
@@ -12,19 +11,21 @@ import graft.model._
   * concatenate doc stores with docID rebasing; k-way sort-merge of postings
   * summing df/ttf; remap via MergeDocIDRemapper).
   *
-  * Spark shape of an UNSORTED merge, sized for 100 TB:
-  *  1. map-side REBASE (narrow, fully parallel): every source posting row is
-  *     re-encoded with docIds + docBase — no shuffle, no giant lists;
-  *  2. term shuffle of the *encoded, compressed* pieces only (orders of
-  *     magnitude smaller than raw postings);
-  *  3. per-term stitch: cold terms decode+re-encode into one row; terms with
-  *     df > hotTermDf stay as multiple piece-rows (disjoint docId ranges) —
-  *     the query path handles split posting rows transparently, so no single
-  *     reducer ever materializes a stopword-scale posting list. This is the
-  *     salted-hot-term handling of SURVEY.md §7.3 realized structurally.
-  * An index-SORTED merge must re-sort (SortingMergePolicy.cs): it is a
-  * [[SegmentRewrite]] into the one target segment — a split into a single
-  * destination; [[splitIndex]] is the same primitive with hash routing.
+  * Every merge is a [[SegmentRewrite]] of the sources' live docs into one
+  * fresh target segment; only the doc map differs, as in Lucene, where a
+  * sorting merge supplies a different doc map to the same merger:
+  *  - an UNSORTED index concatenates (SegmentRewrite.Concat): source
+  *    segments ascending, then docId, applied deletes compacted away — a
+  *    narrow rebase, no sort;
+  *  - an index-SORTED merge re-sorts (SortingMergePolicy.cs,
+  *    SegmentRewrite.Ranked): the live docs take the builder's own
+  *    (sortKey, url) order, as in a split into one destination
+  *    ([[splitIndex]] is the same primitive with hash routing).
+  * The postings explode to per-(term, doc) entries and regroup by the salted
+  * (segment, field, term, newId / pieceEntries) key, so a stopword-scale
+  * term becomes several disjoint-range piece rows (the query path handles
+  * split posting rows transparently) and no reducer holds more than one
+  * piece — the salted hot-term handling of SURVEY.md §7.3.
   *
   * Commit protocol (the segments_N two-phase-commit analog): the merged
   * segment gets a FRESH id, staged data renames in while readers still see
@@ -40,30 +41,29 @@ import graft.model._
   */
 object MergeJob {
 
-  final case class PieceRow(field: String, term: String, piece: Int, firstDoc: Int,
-                            df: Int, ttf: Long,
-                            docDeltas: Array[Byte], tfs: Array[Byte],
-                            positions: Array[Byte], lens: Array[Byte],
-                            skips: Array[SkipRow], payloads: Array[Byte],
-                            offsets: Array[Byte])
-
   /** Max posting entries per encoded piece row of a [[SegmentRewrite]]
-    * (sorted merge, split): a stopword-scale term becomes many rows with
+    * (every merge and split): a stopword-scale term becomes many rows with
     * disjoint increasing docId ranges (the query path already serves split
     * rows) instead of one reducer-sized buffer. */
-  val SortedMergePieceEntries: Int = 1 << 20
+  val PieceEntries: Int = 1 << 20
 
   /** Merge `sources` into a FRESH segment id (max live id + 1) — fully
     * disjoint from every source, so staged data renames IN before anything
     * is deleted. Visibility is gated on the stats-generation flip (one
     * atomic directory rename covering docs+postings+stats — the segments_N
     * analog); source-dir deletion afterwards is mere cleanup that readers
-    * can no longer observe. `hotTermDf` applies to the unsorted concat,
-    * `sortedPieceEntries` to the sorted rewrite. Returns the new segment id.
+    * can no longer observe. `pieceEntries` bounds the posting entries of one
+    * written row. Returns the new segment id.
     */
   def merge(spark: SparkSession, indexPath: String, sources: List[Int],
-            hotTermDf: Int = 5000000,
-            sortedPieceEntries: Int = SortedMergePieceEntries): Int = {
+            pieceEntries: Int = PieceEntries): Int =
+    mergeWith(spark, indexPath, sources, IndexBuilder.readStats(spark, indexPath), pieceEntries)._1
+
+  /** [[merge]] against the live stats rows `statsAll` the caller already
+    * holds; returns the new segment id and the stats rows it committed. */
+  private def mergeWith(spark: SparkSession, indexPath: String, sources: List[Int],
+                        statsAll: Array[SegmentStats],
+                        pieceEntries: Int): (Int, Array[SegmentStats]) = {
     import spark.implicits._
     require(sources.size >= 2)
     val sortedMerge: Boolean =
@@ -74,20 +74,13 @@ object MergeJob {
     // grace window (IndexDeletionPolicy keep-last-commit analog): data made
     // unreachable by the PREVIOUS merge is physically deleted only now, so
     // readers that resolved the previous generation finish their lazy reads
-    purgeTombstones(spark, indexPath)
+    purgeTombstones(spark, indexPath, statsAll.map(_.segmentId).toSet)
 
-    val statsAll = IndexBuilder.readStats(spark, indexPath)
     // fresh id from the MERGE band (2^30+): disjoint from every source AND
     // from any future batch/streaming segment id (their bands are below)
     val mergeBand = statsAll.map(_.segmentId).filter(_ >= IndexBuilder.MergeIdOffset)
     val target =
       if (mergeBand.isEmpty) IndexBuilder.MergeIdOffset else mergeBand.max + 1
-    if (sortedMerge)
-      return mergeSorted(spark, indexPath, srcSorted, target, statsAll, sortedPieceEntries)
-
-    // segment-wide maxDoc from the default field's rows (present per segment)
-    val stats = statsAll.filter(_.field == IndexBuilder.DefaultField)
-      .map(s => s.segmentId -> s).toMap
 
     // deleted docs of the source segments are PURGED here (docIds compact,
     // stats recomputed) — Lucene's merge applies live docs and remaps via
@@ -96,182 +89,50 @@ object MergeJob {
     // (maxMergeAtOnce segments), never by the index-wide delete volume.
     val deleted: Map[Int, Array[Int]] =
       graft.build.Deletes.deletedDocIds(spark, indexPath, Some(srcSorted.toSet))
-    val bases: Map[Int, Int] = {
-      var acc = 0
-      srcSorted.map { s =>
-        val b = s -> acc
-        acc += stats(s).maxDoc.toInt - deleted.get(s).map(_.length).getOrElse(0)
-        b
-      }.toMap
-    }
-    val basesB = spark.sparkContext.broadcast(bases)
-    val deletedB = spark.sparkContext.broadcast(deleted)
-
-    // live docId -> merged docId (-1 for deleted): compaction by segment
-    // base (append order, narrow math)
-    val remapFn: (Int, Int) => Int = (seg: Int, docId: Int) => {
-      val del = deletedB.value.getOrElse(seg, Array.empty[Int])
-      if (del.isEmpty) basesB.value(seg) + docId
-      else {
-        val idx = java.util.Arrays.binarySearch(del, docId)
-        if (idx >= 0) -1
-        else basesB.value(seg) + docId - (-idx - 1) // minus #deleted below
+    val docs = IndexBuilder.readDocs(spark, indexPath, sortedMerge)
+      .filter(col("segmentId").isInCollection(srcSorted))
+    val (input, map) =
+      if (sortedMerge) {
+        val applied = deleted.toSeq.flatMap { case (s, ids) => ids.map(s -> _) }
+          .toDF("segmentId", "docId")
+        (docs.join(applied, Seq("segmentId", "docId"), "left_anti")
+          .withColumn("newSeg", lit(target)), SegmentRewrite.Ranked)
+      } else {
+        val maxDocs = statsAll
+          .filter(s => s.field == IndexBuilder.DefaultField && srcSorted.contains(s.segmentId))
+          .map(s => s.segmentId -> s.maxDoc).toMap
+        (docs, SegmentRewrite.Concat(target, maxDocs, deleted))
       }
-    }
 
     val staging = s"$indexPath/.staging/merge_$target"
-    // the merged segment's stats ride its two writes (narrow docs pass,
-    // post-shuffle stitch): nothing is read back at commit
-    val docTally = graft.build.WriteStats.tally(spark, "docs")
-    val postTally = graft.build.WriteStats.tally(spark, "postings")
-
-    // ---- docs: narrow rebase of the doc store (MergeDocIDRemapper analog)
-    spark.read.parquet(IndexBuilder.docsPath(indexPath))
-      .filter(col("segmentId").isInCollection(srcSorted))
-      .as[DocRow]
-      .flatMap { d =>
-        val nid = remapFn(d.segmentId, d.docId)
-        if (nid < 0) None
-        else {
-          docTally.add(target, IndexBuilder.DefaultField, d.fieldLen)
-          Some((nid, d.url, d.fieldLen, d.normByte))
-        }
-      }
-      .toDF("docId", "url", "fieldLen", "normByte")
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/docs")
-
-    // ---- term vectors (when present): same narrow rebase as the doc store
-    // — purged docs drop, surviving docIds compact (Lucene40TermVectorsWriter
-    // merge path rides the same MergeDocIDRemapper as stored fields)
     val hasVectors = graft.build.TermVectors.enabled(spark, indexPath)
-    if (hasVectors) {
-      spark.read.parquet(graft.build.TermVectors.vectorsPath(indexPath))
-        .filter(col("segmentId").isInCollection(srcSorted))
-        .as[graft.model.VectorRow]
-        .flatMap { v =>
-          val nid = remapFn(v.segmentId, v.docId)
-          if (nid < 0) None
-          else Some((nid, v.field, v.term, v.tf, v.positions, v.starts, v.ends))
-        }
-        .toDF("docId", "field", "term", "tf", "positions", "starts", "ends")
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/vectors")
-    }
-
-    // ---- postings phase 1: narrow rebase (+ purge) + piece tagging
-    val pieces: Dataset[PieceRow] = spark.read
-      .parquet(IndexBuilder.postingsPath(indexPath))
-      .filter(col("segmentId").isInCollection(srcSorted))
-      .transform(IndexBuilder.withPayloadsCol)
-      .select("segmentId", "field", "term", "df", "ttf", "docDeltas", "tfs", "positions", "lens", "skips", "payloads", "offsets")
-      .as[PostingRow]
-      .flatMap { p =>
-        val seg = p.segmentId
-        val (e, firstDoc) = reencode(p.df, p.docDeltas, p.tfs, p.positions, p.lens,
-          p.payloads, p.offsets, (d: Int) => remapFn(seg, d))
-        if (e.df == 0) None // every doc of this piece was deleted
-        else Some(PieceRow(p.field, p.term, p.segmentId, firstDoc, e.df, e.ttf,
-          e.docDeltas, e.tfs, e.positions, e.lens,
-          e.skips.map(s => SkipRow(s.lastDoc, s.docOff, s.tfOff, s.posOff, s.cumDocs, s.maxTf, s.minLen)),
-          e.payloads, e.offsets))
-      }
-
-    // ---- phase 2: shuffle compressed pieces by (field, term), stitch per key
-    // sort key includes firstDoc: a source segment may hold several pieces
-    // per key (builder RAM flushes / prior merges share one segmentId), and
-    // stitching must follow docId order, not source order alone
-    val merged: Dataset[PostingRow] = pieces
-      .repartition(col("field"), col("term"))
-      .sortWithinPartitions(col("field"), col("term"), col("firstDoc"))
-      .mapPartitions { rows =>
-        val hot = hotTermDf
-        new Iterator[PostingRow] {
-          private var pending: PieceRow = if (rows.hasNext) rows.next() else null
-          private val out = scala.collection.mutable.Queue.empty[PostingRow]
-          private def fill(): Unit = {
-            while (out.isEmpty && pending != null) {
-              val field = pending.field
-              val term = pending.term
-              val group = scala.collection.mutable.ArrayBuffer.empty[PieceRow]
-              while (pending != null && pending.field == field && pending.term == term) {
-                group += pending
-                pending = if (rows.hasNext) rows.next() else null
-              }
-              val totalDf = group.map(_.df.toLong).sum
-              if (group.size == 1 || totalDf > hot) {
-                // hot term (or single piece): pieces stay separate rows with
-                // disjoint (or piece-internal sorted) docId ranges
-                group.foreach { g =>
-                  out += PostingRow(0, field, term, g.df, g.ttf, g.docDeltas, g.tfs,
-                    g.positions, g.lens, g.skips, g.payloads, g.offsets)
-                }
-              } else {
-                // gather every surviving entry (pieces arrive in firstDoc
-                // order with disjoint ranges), then encode one stitched row
-                val entries = scala.collection.mutable.ArrayBuffer
-                  .empty[(Int, Int, Array[Int], Int, Array[Array[Byte]], Array[Int])]
-                group.foreach { g =>
-                  val d = PostingsCodec.decode(g.df, g.docDeltas, g.tfs, g.positions, g.lens)
-                  val pays = payloadSlices(d.tfs, d.posStart, g.payloads)
-                  val offs = if (g.offsets == null) null
-                    else PostingsCodec.decodeOffsets(d.tfs, g.offsets)
-                  var i = 0
-                  while (i < d.docIds.length) {
-                    val ps = java.util.Arrays.copyOfRange(d.posFlat, d.posStart(i), d.posStart(i + 1))
-                    val pl = if (pays == null) null
-                      else java.util.Arrays.copyOfRange(pays, d.posStart(i), d.posStart(i + 1))
-                    val of = if (offs == null) null
-                      else flatOffsets(offs._1, offs._2, d.posStart(i), d.posStart(i + 1))
-                    entries += ((d.docIds(i), d.tfs(i), ps, d.lens(i), pl, of))
-                    i += 1
-                  }
-                }
-                val enc = new PostingsCodec.Encoder
-                entries.foreach { case (id, tf, ps, len, pl, of) =>
-                  enc.add(id, tf, ps, len, pl, of)
-                }
-                val e = enc.finish()
-                out += PostingRow(0, field, term, e.df, e.ttf, e.docDeltas, e.tfs, e.positions, e.lens,
-                  e.skips.map(s => SkipRow(s.lastDoc, s.docOff, s.tfOff, s.posOff, s.cumDocs, s.maxTf, s.minLen)),
-                  e.payloads, e.offsets)
-              }
-            }
-          }
-          override def hasNext: Boolean = { fill(); out.nonEmpty }
-          override def next(): PostingRow = {
-            fill()
-            val r = out.dequeue()
-            postTally.add(target, r.field, r.ttf)
-            r
-          }
-        }
-      }
-
-    merged.toDF().drop("segmentId")
-      .write.mode(SaveMode.Overwrite).parquet(s"$staging/postings")
-
+    val rw = SegmentRewrite.run(spark, indexPath, srcSorted, input, map, staging,
+      withVectors = hasVectors, pieceEntries)
     // ---- bring the staged merged data in under the FRESH id: nothing is
     // deleted yet, and readers ignore it (not in the committed stats)
-    renameStaged(spark, indexPath, staging, "", target, hasVectors)
+    renameStaged(spark, indexPath, staging, s"/segmentId=$target", target, hasVectors)
 
     // deletes that raced in against the source segments AFTER the snapshot
-    // above survived the merge un-purged; remap their markers to the merged
-    // segment's ids so the delete is not lost when the source markers prune
+    // above survived the merge un-purged; remap their markers through the
+    // permutation so the delete is not lost when the source markers prune
     // (the snapshot itself is what the merge physically applied)
-    def lateMarkers(): Seq[(Int, Int)] =
-      graft.build.Deletes.deletedDocIds(spark, indexPath, Some(srcSorted.toSet))
-        .toSeq.flatMap { case (seg, arr) =>
-          val applied = deleted.getOrElse(seg, Array.empty[Int])
-          arr.filter(d => java.util.Arrays.binarySearch(applied, d) < 0)
-            .flatMap { d =>
-              val nid = remapFn(seg, d)
-              if (nid >= 0) Some((target, nid)) else None
-            }
+    def lateMarkers(): Seq[(Int, Int)] = {
+      val late = graft.build.Deletes.deletedDocIds(spark, indexPath, Some(srcSorted.toSet))
+        .toSeq.flatMap { case (seg, ids) =>
+          val applied = deleted.getOrElse(seg, Array.emptyIntArray)
+          ids.filter(d => java.util.Arrays.binarySearch(applied, d) < 0).map(seg -> _)
         }
+      if (late.isEmpty) Nil
+      else late.toDF("segmentId", "docId").join(rw.perm, Seq("segmentId", "docId"))
+        .select("newId").as[Int].collect().toSeq.map(target -> _)
+    }
 
-    commitMerged(spark, indexPath, srcSorted, target, statsAll, hasVectors,
-      anyPurged = deleted.nonEmpty, lateMarkers = lateMarkers _,
-      docTally.value.values.headOption.getOrElse((0L, 0L)), postTally.value)
-    target
+    val docsIn = rw.segs.headOption.map(d => (d.maxDoc, d.defaultSttf)).getOrElse((0L, 0L))
+    val committed = commitMerged(spark, indexPath, srcSorted, target, statsAll, hasVectors,
+      anyPurged = deleted.nonEmpty, lateMarkers _, docsIn, rw.postings)
+    val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(staging), true)
+    (target, committed)
   }
 
   /** Rename the staged merged data (`<staging>/<table><part>`) in under the
@@ -306,18 +167,19 @@ object MergeJob {
       spark.catalog.refreshByPath(graft.build.TermVectors.vectorsPath(indexPath))
   }
 
-  /** Shared commit tail of both merge paths: the merged segment's stats
-    * from its writes' tallies (`docs` = (maxDoc, default-field sttf) after
-    * the purge, `postings` = rows and Σ ttf per (target, field)), flip the
-    * stats generation (THE commit), tombstone the superseded data, carry
-    * raced-in deletes forward, then keep or rebuild the dictionary. */
+  /** Commit tail of a merge: the merged segment's stats from its writes'
+    * tallies (`docs` = (maxDoc, default-field sttf) after the purge,
+    * `postings` = rows and Σ ttf per (target, field)), flip the stats
+    * generation (THE commit), tombstone the superseded data, carry raced-in
+    * deletes forward, then keep or rebuild the dictionary. Returns the stats
+    * rows it committed. */
   private def commitMerged(spark: SparkSession, indexPath: String,
                            srcSorted: List[Int], target: Int,
                            statsAll: Array[SegmentStats], hasVectors: Boolean,
                            anyPurged: Boolean,
                            lateMarkers: () => Seq[(Int, Int)],
                            docs: (Long, Long),
-                           postings: Map[(Int, String), (Long, Long)]): Unit = {
+                           postings: Map[(Int, String), (Long, Long)]): Array[SegmentStats] = {
     import spark.implicits._
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     // purged deletes decrement maxDoc/sumTotalTermFreq exactly like a
@@ -388,7 +250,7 @@ object MergeJob {
 
     // drop delete markers whose docs were just purged (liveDocs lifecycle)
     if (anyPurged || late.nonEmpty)
-      graft.build.Deletes.pruneApplied(spark, indexPath)
+      graft.build.Deletes.pruneApplied(spark, indexPath, newStats.map(_.segmentId).toSet)
 
     // the carry-or-rebuild rule (DictTable's freshness contract): global
     // df/ttf are invariant under a merge that dropped no doc, so a fresh
@@ -401,59 +263,7 @@ object MergeJob {
           graft.build.DictTable.segsSignatureOf(newStats.toSeq))
       else graft.build.DictTable.write(spark, indexPath, newStats.toSeq)
     }
-  }
-
-  /** Sorted merge: a [[SegmentRewrite]] of the sources' live docs into the
-    * one target segment, (sortKey, url)-ordered, staged and then committed
-    * exactly like the concat path. */
-  private def mergeSorted(spark: SparkSession, indexPath: String,
-                          srcSorted: List[Int], target: Int,
-                          statsAll: Array[SegmentStats], pieceEntries: Int): Int = {
-    import spark.implicits._
-    val staging = s"$indexPath/.staging/merge_$target"
-
-    // snapshot the resolved markers this merge will purge (localCheckpoint
-    // pins the snapshot: markers appended during the merge stay out of it
-    // and are carried forward as late markers below). With no deletes dir at
-    // all the snapshot is a local empty frame — zero jobs.
-    val hasDeletes = graft.build.Deletes.exists(spark, indexPath)
-    val appliedDf =
-      if (!hasDeletes) Seq.empty[(Int, Int)].toDF("segmentId", "docId")
-      else graft.build.Deletes.deletedDf(spark, indexPath)
-        .filter(col("segmentId").isInCollection(srcSorted))
-        .localCheckpoint(true)
-    val anyPurged = hasDeletes && !appliedDf.isEmpty
-
-    val routed = spark.read.parquet(IndexBuilder.docsPath(indexPath))
-      .filter(col("segmentId").isInCollection(srcSorted))
-      .join(appliedDf, Seq("segmentId", "docId"), "left_anti")
-      .withColumn("newSeg", lit(target))
-    val hasVectors = graft.build.TermVectors.enabled(spark, indexPath)
-    val rw = SegmentRewrite.run(spark, indexPath, srcSorted, routed, staging,
-      withVectors = hasVectors, pieceEntries)
-    renameStaged(spark, indexPath, staging, s"/segmentId=$target", target, hasVectors)
-
-    // raced-in deletes = current markers minus the applied snapshot,
-    // remapped through the permutation table (their docs survived the purge);
-    // with no deletes dir at commit time there is nothing to carry forward
-    def lateMarkers(): Seq[(Int, Int)] =
-      if (!graft.build.Deletes.exists(spark, indexPath)) Seq.empty
-      else graft.build.Deletes.deletedDf(spark, indexPath)
-        .filter(col("segmentId").isInCollection(srcSorted))
-        .join(appliedDf, Seq("segmentId", "docId"), "left_anti")
-        .join(rw.perm, Seq("segmentId", "docId"))
-        .select("newId").as[Int].collect()
-        .toSeq.map(n => (target, n))
-
-    // merged stats come off the rewrite: doc aggregates from its pinned
-    // sort, postings from its write's tally
-    val docs = rw.segs.headOption.map(d => (d.maxDoc, d.defaultSttf)).getOrElse((0L, 0L))
-    commitMerged(spark, indexPath, srcSorted, target, statsAll, hasVectors,
-      anyPurged, lateMarkers _, docs, rw.postings)
-
-    val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(staging), true)
-    target
+    newStats
   }
 
   private def tombstonesDir(indexPath: String) = s"$indexPath/.tombstones"
@@ -472,7 +282,14 @@ object MergeJob {
     * live). Runs automatically at the start of every merge — the one-commit
     * grace window of the keep-last-commit deletion policy.
     */
-  def purgeTombstones(spark: SparkSession, indexPath: String): Unit = {
+  def purgeTombstones(spark: SparkSession, indexPath: String): Unit =
+    purgeTombstones(spark, indexPath,
+      IndexBuilder.readStats(spark, indexPath).map(_.segmentId).toSet)
+
+  /** [[purgeTombstones]] with the live segment set in hand (read only when
+    * a marker prune follows). */
+  private def purgeTombstones(spark: SparkSession, indexPath: String,
+                              live: => Set[Int]): Unit = {
     val fs = new Path(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(tombstonesDir(indexPath))
     if (!fs.exists(dir)) return
@@ -493,65 +310,7 @@ object MergeJob {
     // window (readers on the previous commit still needed them); with the
     // dirs gone they can drop too
     if (purged && graft.build.Deletes.exists(spark, indexPath))
-      graft.build.Deletes.pruneApplied(spark, indexPath)
-  }
-
-  /** Slice the flat decoded offset arrays [from, to) into one entry's
-    * [s0,e0,s1,e1,...] carrier. */
-  private[merge] def flatOffsets(starts: Array[Int], ends: Array[Int],
-                          from: Int, to: Int): Array[Int] = {
-    val out = new Array[Int]((to - from) * 2)
-    var k = from
-    while (k < to) {
-      out(2 * (k - from)) = starts(k)
-      out(2 * (k - from) + 1) = ends(k)
-      k += 1
-    }
-    out
-  }
-
-  /** Decode one posting row, drop deleted docs (remap -1) and encode the
-    * survivors under their new docIds. The concat remap is monotonic, so the
-    * survivors stay in docId order. Returns the encoding and its first docId. */
-  private def reencode(df: Int, docDeltas: Array[Byte], tfs: Array[Byte],
-                       positions: Array[Byte], lens: Array[Byte],
-                       payloads: Array[Byte], offsetBytes: Array[Byte],
-                       remap: Int => Int): (graft.codec.EncodedPostings, Int) = {
-    val d = PostingsCodec.decode(df, docDeltas, tfs, positions, lens)
-    val pays = payloadSlices(d.tfs, d.posStart, payloads)
-    val offs = if (offsetBytes == null) null
-      else PostingsCodec.decodeOffsets(d.tfs, offsetBytes)
-    val enc = new PostingsCodec.Encoder
-    var firstDoc = -1
-    var j = 0
-    while (j < d.docIds.length) {
-      val nid = remap(d.docIds(j))
-      if (nid >= 0) { // deleted docs (-1) purge here
-        if (firstDoc < 0) firstDoc = nid
-        val ps = java.util.Arrays.copyOfRange(d.posFlat, d.posStart(j), d.posStart(j + 1))
-        val pl = if (pays == null) null
-          else java.util.Arrays.copyOfRange(pays, d.posStart(j), d.posStart(j + 1))
-        val of = if (offs == null) null
-          else flatOffsets(offs._1, offs._2, d.posStart(j), d.posStart(j + 1))
-        enc.add(nid, d.tfs(j), ps, d.lens(j), pl, of)
-      }
-      j += 1
-    }
-    (enc.finish(), math.max(firstDoc, 0))
-  }
-
-  /** Per-position payload byte slices aligned with posFlat (null when the
-    * list has no payload stream) — merge re-encodes payloads through the
-    * same add() path as positions so purge/rebase keep them aligned. */
-  private[merge] def payloadSlices(tfs: Array[Int], posStart: Array[Int],
-                            payloads: Array[Byte]): Array[Array[Byte]] = {
-    if (payloads == null) return null
-    val total = posStart(tfs.length)
-    val (starts, lens, flat) = PostingsCodec.decodePayloads(total, payloads)
-    Array.tabulate(total) { k =>
-      if (lens(k) == 0) null
-      else java.util.Arrays.copyOfRange(flat, starts(k), starts(k) + lens(k))
-    }
+      graft.build.Deletes.pruneApplied(spark, indexPath, live)
   }
 
   /** Run tiered merge rounds until the policy is satisfied. Returns the
@@ -561,22 +320,21 @@ object MergeJob {
     */
   def mergeToPolicy(spark: SparkSession, indexPath: String,
                     policy: TieredMergePolicy = new TieredMergePolicy()): Int = {
-    import spark.implicits._
+    // the stats rows ride from round to round: each merge hands back what
+    // it committed
+    var stats = IndexBuilder.readStats(spark, indexPath)
     var merges = 0
-    var cont = true
-    while (cont) {
-      val sizes = IndexBuilder.readStats(spark, indexPath)
-        .filter(_.field == IndexBuilder.DefaultField)
-        .map(s => s.segmentId -> s.maxDoc).toMap
-      policy.findMerges(sizes) match {
-        case m :: _ =>
-          merge(spark, indexPath, m.sources)
-          merges += 1
-        case Nil => cont = false
-      }
+    var next = policy.findMerges(sizesOf(stats))
+    while (next.nonEmpty) {
+      stats = mergeWith(spark, indexPath, next.head.sources, stats, PieceEntries)._2
+      merges += 1
+      next = policy.findMerges(sizesOf(stats))
     }
     merges
   }
+
+  private def sizesOf(stats: Array[SegmentStats]): Map[Int, Long] =
+    stats.filter(_.field == IndexBuilder.DefaultField).map(s => s.segmentId -> s.maxDoc).toMap
 
   /** IndexSplitter / MultiPassIndexSplitter analog
     * (/root/reference/src/Lucene.Net.Misc/Index/IndexSplitter.cs,
@@ -599,7 +357,7 @@ object MergeJob {
     */
   def splitIndex(spark: SparkSession, srcPath: String, dstPath: String,
                  parts: Int,
-                 pieceEntries: Int = SortedMergePieceEntries,
+                 pieceEntries: Int = PieceEntries,
                  /** Doc-store predicate restricting which live docs reach
                    * the output — the PKIndexSplitter seam (see
                    * [[partitionIndex]]); columns of the docs table
@@ -613,19 +371,18 @@ object MergeJob {
 
     val srcStats = IndexBuilder.readStats(spark, srcPath).toSeq
     val liveSrc = srcStats.map(_.segmentId).toSet
-    val routed = spark.read.parquet(IndexBuilder.docsPath(srcPath))
+    val routed = IndexBuilder.readDocs(spark, srcPath, cfg.indexSort.isDefined)
       .filter(col("segmentId").isInCollection(liveSrc))
       .join(graft.build.Deletes.deletedDf(spark, srcPath),
         Seq("segmentId", "docId"), "left_anti")
       .filter(docFilter)
       .withColumn("newSeg", graft.functions.ScalarExpressions.segmentOf(col("url"), parts))
-    val rw = SegmentRewrite.run(spark, srcPath, liveSrc, routed, dstPath,
+    val rw = SegmentRewrite.run(spark, srcPath, liveSrc, routed, SegmentRewrite.Ranked, dstPath,
       withVectors = graft.build.TermVectors.enabled(spark, srcPath), pieceEntries)
 
     // term blooms regenerate when the source used them
     if (cfg.bloomFilter)
-      IndexBuilder.writeBlooms(spark.read.parquet(IndexBuilder.postingsPath(dstPath)),
-        dstPath, SaveMode.Overwrite)
+      IndexBuilder.writeBlooms(IndexBuilder.readPostings(spark, dstPath), dstPath, SaveMode.Overwrite)
 
     // stats (generation 0 of the fresh index) + manifest, builder formula,
     // straight from the rewrite: doc aggregates off its pinned sort, posting

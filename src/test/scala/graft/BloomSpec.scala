@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.build.IndexBuilder
 import graft.codec.TermBloom
+import graft.merge.MergeJob
 import graft.search._
 import java.nio.file.Files
 
@@ -67,5 +68,29 @@ class BloomSpec extends AnyFunSuite {
     assert(urls(s, TermQ("needle")) === urls(s2, TermQ("needle")))
     assert(urls(s, TermQ("common")) === urls(s2, TermQ("common")))
     assert(s2.termBlooms.isEmpty) // opt-in: absent dir -> no pruning, no error
+  }
+
+  test("a split of a bloom-built index regenerates a bloom row per destination (segment, field)") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graftbloomsplit").toString
+    val pages = (0 until 120)
+      .map(i => (f"https://bloom-$i%03d.example/", if (i == 7) "needle common" else s"word$i common"))
+      .toDF("url", "text")
+    IndexBuilder.build(spark, pages, s"$base/src",
+      IndexBuilder.BuildConfig(2, "simple", groupSize = 2, bloomFilter = true))
+    assert(IndexBuilder.readConfig(spark, s"$base/src").bloomFilter)
+    MergeJob.splitIndex(spark, s"$base/src", s"$base/dst", 3)
+
+    val dst = new Searcher(spark, s"$base/dst")
+    val keys = dst.postingsSlim.select("segmentId", "field").distinct()
+      .as[(Int, String)].collect().toSet
+    assert(keys.size == 3)
+    assert(spark.read.parquet(IndexBuilder.bloomsPath(s"$base/dst"))
+      .select("segmentId", "field").as[(Int, String)].collect().toSet == keys)
+    val src = new Searcher(spark, s"$base/src")
+    def urls(se: Searcher, q: Query) = se.search(q, 1000).collect().map(_.getString(0)).toSet
+    Seq("needle", "common", "word3").foreach { t =>
+      assert(urls(dst, TermQ(t)) == urls(src, TermQ(t)), t)
+    }
   }
 }

@@ -71,13 +71,25 @@ class DeletesSpec extends AnyFunSuite {
     // capture pre-merge stats NOW: like a reference reader over merged-away
     // segments, s0 must not be used after the merge deletes its files
     val dfBefore = s0.termStats(Set(freq))(freq)._1
-    MergeJob.merge(spark, path, List(0, 1, 2, 3))
+    // the concat order an unsorted merge keeps: source segment ascending,
+    // then docId, the deleted docs compacted away
+    val deletedKeys = Deletes.deletedDocIds(spark, path).toSeq
+      .flatMap { case (seg, ids) => ids.map(seg -> _) }.toSet
+    val concatUrls = spark.read.parquet(s"$path/docs").select("segmentId", "docId", "url")
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getString(2))
+      .filterNot(d => deletedKeys.contains(d._1)).sortBy(_._1).map(_._2).toSeq
+    val target = MergeJob.merge(spark, path, List(0, 1, 2, 3))
 
     val merged = new Searcher(spark, path)
     // same live result set, purged stats
     assert(urlsOf(merged, TermQ(freq)) == liveBefore)
     assert(merged.maxDoc == N - 7)
     assert(merged.termStats(Set(freq))(freq)._1 == dfBefore - 7)
+    // merged docIds 0..n-1 follow the concat order
+    val mergedDocs = spark.read.parquet(s"$path/docs/segmentId=$target").select("docId", "url")
+      .collect().map(r => r.getInt(0) -> r.getString(1)).sortBy(_._1).toSeq
+    assert(mergedDocs.map(_._1) == concatUrls.indices)
+    assert(mergedDocs.map(_._2) == concatUrls)
     // after the one-commit reader grace elapses (tombstone purge), the doc
     // store physically no longer contains the victims; docIds dense
     MergeJob.purgeTombstones(spark, path)

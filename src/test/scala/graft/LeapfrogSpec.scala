@@ -95,7 +95,7 @@ class LeapfrogSpec extends AnyFunSuite {
     def hits(s: Searcher) = s.search(q, kAll).collect()
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toList
     val expected = hits(before)
-    MergeJob.merge(spark, base, List(0, 1, 2, 3), hotTermDf = 0) // force pieces
+    MergeJob.merge(spark, base, List(0, 1, 2, 3), pieceEntries = 16) // force pieces
     val after = new Searcher(spark, base)
     assert(hits(after) == expected)
   }

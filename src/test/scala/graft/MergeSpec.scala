@@ -184,9 +184,9 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("re-merging a piece-split segment stitches pieces in docId order") {
-    // seg 0 gains multiple pieces per term (hotTermDf = 0); merging it again
-    // puts same-segmentId pieces into one group — order must come from
-    // firstDoc, not source id (regression: crashed on non-increasing docIds)
+    // the first merge writes several pieces per term (pieceEntries = 8);
+    // merging it again must stitch same-segmentId pieces in docId order, not
+    // source order (regression: crashed on non-increasing docIds)
     val base = Files.createTempDirectory("graftremerge").toString
     val df = spark.createDataFrame(PagesGen.local(160)).toDF("url", "text")
     IndexBuilder.build(spark, df, base, IndexBuilder.BuildConfig(4, "standard", groupSize = 4))
@@ -194,17 +194,42 @@ class MergeSpec extends AnyFunSuite {
     val pre = new Searcher(spark, base)
     val kAll = pre.count(q).toInt + 5 // ties at a smaller k cut differently across ephemeral ids
     val before = resultSet(pre, q, kAll)
-    val m1 = MergeJob.merge(spark, base, List(0, 1), hotTermDf = 0) // piece rows kept
-    val m2 = MergeJob.merge(spark, base, List(m1, 2))               // re-merge piece rows
-    MergeJob.merge(spark, base, List(m2, 3), hotTermDf = 0)
+    val m1 = MergeJob.merge(spark, base, List(0, 1), pieceEntries = 8) // piece rows
+    val m2 = MergeJob.merge(spark, base, List(m1, 2))                  // re-merge piece rows
+    MergeJob.merge(spark, base, List(m2, 3), pieceEntries = 8)
     val report = CheckIndex.run(spark, base)
     assert(report.ok, report.violations.mkString("; "))
     assert(report.segments == 1)
     assert(resultSet(new Searcher(spark, base), q, kAll) == before)
   }
 
+  test("postings written without payload and offset columns still merge and split") {
+    val base = Files.createTempDirectory("graftlegacycols").toString
+    val df = spark.createDataFrame(PagesGen.local(120)).toDF("url", "text")
+    IndexBuilder.build(spark, df, s"$base/idx", IndexBuilder.BuildConfig(2, "standard", groupSize = 2))
+    // the postings of an index from before the payload / offset streams
+    val postings = IndexBuilder.postingsPath(s"$base/idx")
+    spark.read.parquet(postings).drop("payloads", "offsets")
+      .write.partitionBy("segmentId").parquet(s"$base/legacy")
+    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(postings), true)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$base/legacy"), new org.apache.hadoop.fs.Path(postings)))
+    spark.catalog.refreshByPath(postings)
+    val pre = new Searcher(spark, s"$base/idx")
+    val q = TermQ(PagesGen.word(2))
+    val kAll = pre.count(q).toInt + 5
+    val before = resultSet(pre, q, kAll)
+    MergeJob.splitIndex(spark, s"$base/idx", s"$base/split", 3)
+    MergeJob.merge(spark, s"$base/idx", List(0, 1))
+    Seq(s"$base/idx", s"$base/split").foreach { p =>
+      val report = CheckIndex.run(spark, p)
+      assert(report.ok, report.violations.mkString("; "))
+      assert(resultSet(new Searcher(spark, p), q, kAll) == before, p)
+    }
+  }
+
   test("hot-term piece split keeps queries correct") {
-    // force every term to stay as pieces (hotTermDf = 0), then merge two
+    // force frequent terms into pieces (pieceEntries = 8), then merge the
     // fresh segments and confirm the split posting rows still serve queries
     val base = Files.createTempDirectory("graftpieces").toString
     val df = spark.createDataFrame(PagesGen.local(120)).toDF("url", "text")
@@ -213,7 +238,7 @@ class MergeSpec extends AnyFunSuite {
     val q = TermQ(PagesGen.word(2))
     val kAll = full.count(q).toInt + 5
     val before = resultSet(full, q, kAll)
-    MergeJob.merge(spark, base, List(0, 1, 2, 3), hotTermDf = 0)
+    MergeJob.merge(spark, base, List(0, 1, 2, 3), pieceEntries = 8)
     val after = new Searcher(spark, base)
     assert(resultSet(after, q, kAll) == before)
     val report = CheckIndex.run(spark, base)

@@ -11,7 +11,7 @@ object SoakMerge {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(500000L)
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
@@ -44,9 +44,18 @@ object SoakMerge {
       .map(r => (r.getString(0), r.getDouble(1))).sortBy(x => (-x._2, x._1)).toList
     val before = canonical(s)
     val policy = new TieredMergePolicy(segsPerTier = 3.0, maxMergeAtOnce = 6, floorSegmentDocs = 2000)
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime()
     val merges = MergeJob.mergeToPolicy(spark, base, policy)
-    println(f"SOAK2 merge: $merges rounds in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val mergeSec = (System.nanoTime() - t0) / 1e9
+    org.apache.spark.sql.execution.SparkInternals.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(listener)
+    println(f"SOAK2 merge: $merges rounds in $mergeSec%.1f s, ${shuffled.get} shuffle bytes written")
     val after = new Searcher(spark, base)
     val afterHits = canonical(after)
     val boundary = math.min(before.map(_._2).min, afterHits.map(_._2).min)

@@ -193,7 +193,7 @@ class SortedIndexSpec extends AnyFunSuite {
     val prev = spark.conf.get(coalesceKey, "true")
     spark.conf.set(coalesceKey, "false")
     try
-      MergeJob.merge(spark, b, List(0, 1, 2, 3), sortedPieceEntries = 64)
+      MergeJob.merge(spark, b, List(0, 1, 2, 3), pieceEntries = 64)
     finally spark.conf.set(coalesceKey, prev)
 
     // source segment dirs survive one commit as tombstones — read only the

@@ -9,7 +9,7 @@ import graft.analysis.DelimitedPayloadAnalyzer.encodeInt
 import java.nio.file.Files
 
 /** Span payload checks and PayloadNearQuery over a MERGED index with FORCED
-  * piece rows (hotTermDf = 0): the payload stream must survive the merge's
+  * piece rows (pieceEntries = 64): the payload stream must survive the merge's
   * docId remap + purge and the PayloadIndex must resolve payloads across
   * disjoint piece ranges (merge/MergeJob payload rebase x the span payload
   * machinery). */
@@ -29,7 +29,7 @@ class SpanPayloadMergeSpec extends AnyFunSuite {
       IndexBuilder.BuildConfig(4, "delimited_payload", groupSize = 4))
     val dels = (0 until N).filterNot(live).map(id => f"doc$id%05d").toDF("url")
     graft.build.Deletes.deleteUrls(spark, base, dels)
-    MergeJob.merge(spark, base, List(0, 1, 2, 3), hotTermDf = 0) // force pieces
+    MergeJob.merge(spark, base, List(0, 1, 2, 3), pieceEntries = 64) // force pieces
     new Searcher(spark, base)
   }
 
@@ -39,7 +39,7 @@ class SpanPayloadMergeSpec extends AnyFunSuite {
   test("merged index serves alpha from multiple piece rows") {
     val pieces = mergedSe.postingsRaw
       .filter(col("field") === "text" && col("term") === "alpha").count()
-    assert(pieces > 1, s"expected piece rows after hotTermDf=0 merge, got $pieces")
+    assert(pieces > 1, s"expected piece rows after a pieceEntries=64 merge, got $pieces")
   }
 
   test("SpanPayloadCheck over merged piece rows matches the analytic set") {

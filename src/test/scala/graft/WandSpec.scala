@@ -105,7 +105,7 @@ class WandSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graftwandmerge").toString
     val df = spark.createDataFrame(PagesGen.local(200)).toDF("url", "text")
     IndexBuilder.build(spark, df, base, IndexBuilder.BuildConfig(4, "standard", groupSize = 4))
-    MergeJob.merge(spark, base, List(0, 1, 2, 3), hotTermDf = 0) // force pieces
+    MergeJob.merge(spark, base, List(0, 1, 2, 3), pieceEntries = 16) // force pieces
     val s = new Searcher(spark, base)
     val q = BoolQ(List(Occur.Should -> TermQ(PagesGen.word(2)),
       Occur.Should -> TermQ(PagesGen.word(9))))

@@ -41,11 +41,22 @@ class WriteFaultSpec extends AnyFunSuite {
   }
 
   test("a corrupt postings row fails a sorted merge: no commit, sibling writes cancelled") {
+    assertCorruptMergeFails(indexSort = Some("nlen"))
+  }
+
+  test("a corrupt postings row fails an unsorted merge: no commit, sibling writes cancelled") {
+    assertCorruptMergeFails(indexSort = None)
+  }
+
+  /** A merge of a termVectors index whose segment 0 holds a corrupt posting
+    * row fails without publishing a commit, and every doc-store / vector
+    * write running beside the failed postings write ends cancelled. */
+  private def assertCorruptMergeFails(indexSort: Option[String]): Unit = {
     val b = Files.createTempDirectory("graftfaultmerge").toString
     val df = spark.createDataFrame(PagesGen.local(120)).toDF("url", "text")
       .withColumn("nlen", length(col("text")).cast("long"))
     IndexBuilder.build(spark, df, b, IndexBuilder.BuildConfig(2, "simple", groupSize = 2,
-      termVectors = true, indexSort = Some("nlen")))
+      termVectors = true, indexSort = indexSort))
     corruptOnePostingRow(IndexBuilder.postingsPath(b), segment = 0)
     val gen0 = IndexBuilder.statsGen(spark, b)
 
