@@ -111,18 +111,20 @@ object Deletes {
     *    so the collect is bounded by the merge fan-in, not the index;
     *  - the searcher's small-overlay fast path, gated by [[count]] against
     *    Searcher.deleteBroadcastLimit before calling this.
+    * One job: the raw scoped markers are collected and deduped on the
+    * driver (a marker appended twice is one delete), no `distinct` shuffle.
     */
   def deletedDocIds(spark: SparkSession, indexPath: String,
                     segments: Option[Set[Int]] = None): Map[Int, Array[Int]] = {
     import spark.implicits._
     if (!exists(spark, indexPath)) return Map.empty
-    val base = deletedDf(spark, indexPath)
+    val base = spark.read.schema(MarkerSchema).parquet(deletesPath(indexPath))
     val scoped = segments match {
       case Some(s) => base.filter(col("segmentId").isInCollection(s))
       case None => base
     }
     scoped.as[(Int, Int)].collect()
-      .groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2).sorted }
+      .groupBy(_._1).map { case (s, arr) => s -> arr.map(_._2).distinct.sorted }
   }
 
   /** Drop markers of segments that are no longer `live` (their docs were

@@ -46,11 +46,6 @@ object DictTable {
       .map(s => s.segmentId -> s.maxDoc).toMap.toSeq
       .sortBy(_._1).map { case (s, m) => s"$s:$m" }.mkString(",")
 
-  /** Signature of the live segment set, from one read of the stats table. */
-  def segsSignature(spark: SparkSession, indexPath: String): String =
-    try segsSignatureOf(IndexBuilder.readStats(spark, indexPath))
-    catch { case _: Exception => "" }
-
   /** Dictionaries whose term bound (Σ sumDocFreq) is at most this many rows
     * are written as ONE globally sorted file — tighter row-group pruning, no
     * range-partitioner sampling job, no small-file spray; larger ones keep
@@ -187,23 +182,32 @@ object DictTable {
     }
   }
 
+  /** Whether the marker matches the live segment set, from one read of
+    * the stats table. */
   def isValid(spark: SparkSession, indexPath: String): Boolean =
-    readMarker(spark, indexPath).contains(segsSignature(spark, indexPath))
+    isFresh(spark, indexPath, IndexBuilder.readStats(spark, indexPath).toSeq)
 
-  /** The dictionary DataFrame if present AND fresh. */
-  def readIfValid(spark: SparkSession, indexPath: String): Option[DataFrame] =
-    if (isValid(spark, indexPath)) {
-      try Some(spark.read.parquet(dictPath(indexPath)))
-      catch { case _: Exception => None }
-    } else None
+  private def isFresh(spark: SparkSession, indexPath: String,
+                      stats: Seq[graft.model.SegmentStats]): Boolean =
+    readMarker(spark, indexPath).contains(segsSignatureOf(stats))
+
+  /** The dictionary DataFrame if present AND fresh against `stats`, the
+    * live stats rows the reader holds (no stats re-read). The schema is
+    * inferred: dictionaries written before the `len` column lack it. */
+  def readIfValid(spark: SparkSession, indexPath: String,
+                  stats: Seq[graft.model.SegmentStats]): Option[DataFrame] =
+    readFresh(spark, indexPath, stats, dictPath(indexPath))
 
   /** The positional-bigram table if present AND fresh (same marker as the
     * dictionary: both are rewritten together and share df/ttf merge
     * invariance). Absent on indexes written before the gram format —
     * readers fall back to the length-band dictionary scan. */
-  def readGramsIfValid(spark: SparkSession, indexPath: String): Option[DataFrame] =
-    if (isValid(spark, indexPath)) {
-      try Some(spark.read.parquet(gramsPath(indexPath)))
-      catch { case _: Exception => None }
-    } else None
+  def readGramsIfValid(spark: SparkSession, indexPath: String,
+                       stats: Seq[graft.model.SegmentStats]): Option[DataFrame] =
+    readFresh(spark, indexPath, stats, gramsPath(indexPath))
+
+  private def readFresh(spark: SparkSession, indexPath: String,
+                        stats: Seq[graft.model.SegmentStats], table: String): Option[DataFrame] =
+    if (!isFresh(spark, indexPath, stats)) None
+    else scala.util.Try(spark.read.parquet(table)).toOption
 }

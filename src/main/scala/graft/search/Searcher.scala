@@ -1,7 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.analysis.Analyzers
 import graft.build.IndexBuilder
 import graft.codec.{PostingsCodec, SmallFloat}
@@ -128,6 +129,21 @@ object Searcher {
   /** Entry cap of the per-reader term-stats memo (entries are ~100 bytes;
     * the cap bounds a pathological expansion stream, not normal serving). */
   val TermStatsCacheMax: Int = 262144
+
+  /** Rank order of every top-k (HitQueue.cs:78-88 / TopDocs.cs:111-135),
+    * the same order as SQL's (score desc, segmentId asc, docId asc): scores
+    * tie by `==` (so -0.0 ties 0.0) and NaN ranks first. */
+  val HitRank: Ordering[Hit] = new Ordering[Hit] {
+    def compare(a: Hit, b: Hit): Int =
+      if (a.score != b.score && !(a.score.isNaN && b.score.isNaN))
+        (if (a.score.isNaN || a.score > b.score) -1 else 1)
+      else if (a.segmentId != b.segmentId) Integer.compare(a.segmentId, b.segmentId)
+      else Integer.compare(a.docId, b.docId)
+  }
+
+  /** Schema of every top-k result. */
+  val TopKSchema: StructType =
+    StructType.fromDDL("url STRING, score DOUBLE NOT NULL, segmentId INT NOT NULL, docId INT NOT NULL")
 
   /** r2's fixed-member similarities are members of the general frameworks. */
   private[search] def normalizeSim(k: SimilarityKind): SimilarityKind = k match {
@@ -413,13 +429,11 @@ final class Searcher(spark: SparkSession, indexPath: String,
   /** Global collection stats: maxDoc is segment-wide (every field row of a
     * segment carries it); sumTotalTermFreq is per field (CollectionStatistics
     * is per field in the reference too — Search/CollectionStatistics.cs:32).
-    * dropDuplicates guards against re-appended stats from a crash-resumed
-    * group (deterministic build => identical values).
+    * readStats dedupes re-appended stats from a crash-resumed group
+    * (deterministic build => identical values).
     */
   @transient private lazy val statsRows: Array[SegmentStats] =
-    spark.read.parquet(IndexBuilder.statsPath(spark, indexPath))
-      .dropDuplicates("segmentId", "field")
-      .as[SegmentStats].collect()
+    IndexBuilder.readStats(spark, indexPath)
 
   @transient lazy val maxDoc: Long =
     statsRows.filter(_.field == defaultField).map(_.maxDoc).sum
@@ -468,7 +482,7 @@ final class Searcher(spark: SparkSession, indexPath: String,
     if (deletedCount == 0 || largeDeletes) Map.empty
     else graft.build.Deletes.deletedDocIds(spark, indexPath, Some(liveSegments))
 
-  @transient private lazy val deletedB =
+  @transient private[search] lazy val deletedB =
     spark.sparkContext.broadcast(deletedDocs)
 
   private def applyLiveDocs(ds: Dataset[Hit]): Dataset[Hit] =
@@ -501,7 +515,7 @@ final class Searcher(spark: SparkSession, indexPath: String,
     * cached: at web scale the dictionary is hundreds of GB, and every use
     * filters it down to a handful of terms first (Parquet min/max prunes). */
   @transient lazy val dictTable: Option[DataFrame] =
-    graft.build.DictTable.readIfValid(spark, indexPath)
+    graft.build.DictTable.readIfValid(spark, indexPath, statsRows.toSeq)
 
   /** Per-(segment, field) term blooms (BloomFilteringPostingsFormat analog,
     * codec/TermBloom.scala) — ADVISORY driver-side cache: a term query only
@@ -556,7 +570,7 @@ final class Searcher(spark: SparkSession, indexPath: String,
     * EQUALITY instead of a full dictionary scan. None on pre-gram indexes
     * or when the dictionary is stale. */
   @transient lazy val gramsTable: Option[DataFrame] =
-    graft.build.DictTable.readGramsIfValid(spark, indexPath)
+    graft.build.DictTable.readGramsIfValid(spark, indexPath, statsRows.toSeq)
 
   /** Cross-segment (field, term) stats (TermContext.Build analog,
     * Index/TermContext.cs:90): one tiny pruned aggregate, collected to the
@@ -1436,7 +1450,9 @@ final class Searcher(spark: SparkSession, indexPath: String,
     * Pure term-disjunctions in LuceneFloat mode route through Block-Max WAND
     * automatically (the reference likewise picks its specialist scorer —
     * BooleanQuery.cs:429-495); all other shapes take the DataFrame plan.
-    * Identity of the two paths is pinned by WandSpec.
+    * Identity of the two paths is pinned by WandSpec. Like every top-k
+    * entry point, it runs the query when called and returns the k rows as a
+    * local DataFrame (see [[topK]]).
     */
   def search(q: Query, k: Int): DataFrame = {
     (mode, wandOrTerms(q)) match {
@@ -1446,32 +1462,45 @@ final class Searcher(spark: SparkSession, indexPath: String,
     }
   }
 
-  /** The DataFrame-plan top-k path (no WAND dispatch). */
-  def searchPlan(q: Query, k: Int): DataFrame = {
-    val hits = compile(q)
-      .orderBy(col("score").desc, col("segmentId").asc, col("docId").asc)
-      .limit(k)
-    // fetch keys for just the k winners: broadcast the tiny side
-    broadcast(hits).join(docs.select("segmentId", "docId", "url"), Seq("segmentId", "docId"))
-      .select(col("url"), col("score"), col("segmentId"), col("docId"))
-      .orderBy(col("score").desc, col("segmentId").asc, col("docId").asc)
+  /** The finisher of every top-k entry point — TopDocs.Merge, then the
+    * stored fields of just the winners: rank `hits` on the driver
+    * ([[Searcher.HitRank]]), keep the first k, read their urls with one
+    * segment-pruned, docId-filtered scan of `docs`, and return them in rank
+    * order as a local DataFrame of [[Searcher.TopKSchema]] — collecting it
+    * starts no job. `hits` are per-partition survivors (at most k each), so
+    * the driver holds at most k × partitions hits. */
+  private[search] def topK(hits: Seq[Hit], k: Int): DataFrame = {
+    val winners = hits.sorted(Searcher.HitRank).take(k)
+    val urls: Map[(Int, Int), String] =
+      if (winners.isEmpty) Map.empty
+      else docs.filter(col("segmentId").isInCollection(winners.map(_.segmentId).distinct) &&
+          col("docId").isInCollection(winners.map(_.docId).distinct))
+        .select("segmentId", "docId", "url").collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getString(2)).toMap
+    val rows = winners.flatMap(h => urls.get((h.segmentId, h.docId))
+      .map(url => Row(url, h.score, h.segmentId, h.docId)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), Searcher.TopKSchema)
   }
 
+  /** Top k of a hit stream: a bounded heap per partition, merged on the
+    * driver (TopScoreDocCollector per segment + TopDocs.Merge). */
+  private def topK(hits: Dataset[Hit], k: Int): DataFrame =
+    topK(hits.rdd.takeOrdered(k)(Searcher.HitRank).toSeq, k)
+
+  /** The DataFrame-plan top-k path (no WAND dispatch); runs the query when
+    * called. */
+  def searchPlan(q: Query, k: Int): DataFrame = topK(compile(q), k)
+
   /** Paging (TopScoreDocCollector.SearchAfter, :90-112): strictly after the
-    * (score, segmentId, docId) cursor in rank order.
+    * (score, segmentId, docId) cursor in rank order; runs the query when
+    * called.
     */
-  def searchAfter(q: Query, k: Int, afterScore: Double, afterSeg: Int, afterDoc: Int): DataFrame = {
-    val hits = compile(q).filter(
+  def searchAfter(q: Query, k: Int, afterScore: Double, afterSeg: Int, afterDoc: Int): DataFrame =
+    topK(compile(q).filter(
       col("score") < afterScore ||
         (col("score") === afterScore &&
           (col("segmentId") > afterSeg ||
-            (col("segmentId") === afterSeg && col("docId") > afterDoc))))
-      .orderBy(col("score").desc, col("segmentId").asc, col("docId").asc)
-      .limit(k)
-    broadcast(hits).join(docs.select("segmentId", "docId", "url"), Seq("segmentId", "docId"))
-      .select(col("url"), col("score"), col("segmentId"), col("docId"))
-      .orderBy(col("score").desc, col("segmentId").asc, col("docId").asc)
-  }
+            (col("segmentId") === afterSeg && col("docId") > afterDoc)))), k)
 
   def count(q: Query): Long = compile(q).count()
 
@@ -1485,7 +1514,7 @@ final class Searcher(spark: SparkSession, indexPath: String,
     * reports whether any segment hit its budget. A wall-clock budget would
     * make results nondeterministic under load — this keeps the greedy-
     * collector contract (collect up to the tick, report partiality)
-    * reproducible and oracle-checkable.
+    * reproducible and oracle-checkable. Runs the query when called.
     */
   def searchTimeLimited(q: Query, k: Int, tickBudget: Long): (DataFrame, Boolean) = {
     import org.apache.spark.sql.expressions.Window
@@ -1498,14 +1527,7 @@ final class Searcher(spark: SparkSession, indexPath: String,
       .filter(col("rn") <= cap)
       .localCheckpoint(true)
     val timedOut = cap > tickBudget && !head.filter(col("rn") > tickBudget).isEmpty
-    val kept = head.filter(col("rn") <= tickBudget).drop("rn")
-      .orderBy(col("score").desc, col("segmentId").asc, col("docId").asc)
-      .limit(k)
-    val top = broadcast(kept)
-      .join(docs.select("segmentId", "docId", "url"), Seq("segmentId", "docId"))
-      .select(col("url"), col("score"), col("segmentId"), col("docId"))
-      .orderBy(col("score").desc, col("segmentId").asc, col("docId").asc)
-    (top, timedOut)
+    (topK(head.filter(col("rn") <= tickBudget).drop("rn").as[Hit], k), timedOut)
   }
 
   /** Caching collector (Search/CachingCollector.cs:125-143,199-201): the
@@ -1673,14 +1695,10 @@ final class Searcher(spark: SparkSession, indexPath: String,
 
   /** Block-Max WAND fast path for pure term-disjunctions (LuceneFloat mode);
     * other query shapes (and ExactDouble mode) fall back to the DataFrame
-    * plan. Identical results by construction — validated in WandSpec.
+    * plan: the same dispatch as [[search]] (identical results by
+    * construction — validated in WandSpec). Runs the query when called.
     */
-  def searchWand(q: Query, k: Int): DataFrame =
-    (mode, wandOrTerms(q)) match {
-      case (LuceneFloat, Some((f, terms))) if !largeDeletes =>
-        Wand.searchOr(this, spark, indexPath, f, terms, k)
-      case _ => searchPlan(q, k)
-    }
+  def searchWand(q: Query, k: Int): DataFrame = search(q, k)
 
   // ---------------------------------------------------------------- explain
 

@@ -176,9 +176,7 @@ final class ServingSession(val searcher: Searcher,
   }
 
   private def topK(hits: Iterator[Hit], k: Int): Array[Hit] = {
-    // (score desc, segmentId asc, docId asc) — the HitQueue tie-break
-    val ord = Ordering.by[Hit, (Double, Int, Int)](h => (-h.score, h.segmentId, h.docId))
-    dropDeleted(hits).toArray.sorted(ord).take(k)
+    dropDeleted(hits).toArray.sorted(Searcher.HitRank).take(k)
   }
 
   // ---- warm query paths ---------------------------------------------------
@@ -446,29 +444,20 @@ final class ServingSession(val searcher: Searcher,
     if (present.isEmpty) return Array.empty
     val bm25 = searcher.bm25
     val maxDoc = searcher.maxDoc
-    val sttf = searcher.fieldSttf.getOrElse(field, 0L)
     val weights: Map[String, Float] = present.groupBy(identity).map { case (t, dup) =>
       t -> (bm25.idf(stats(t)._1, maxDoc) * (bm25.k1 + 1) * dup.size)
     }
-    val avgdl = bm25.avgFieldLength(sttf, maxDoc)
-    val cache = new Array[Float](256)
-    var j = 0
-    while (j < 256) {
-      cache(j) = bm25.k1 * ((1 - bm25.b) + bm25.b * bm25.normTable(j) / avgdl); j += 1
-    }
+    val cache = searcher.normCache(field)
     val termOrder: Map[String, Int] = present.distinct.zipWithIndex.toMap
     val del = searcher.deletedDocs
-    val heap = new java.util.PriorityQueue[Wand.WandHit](k + 1, Wand.heapComparator)
+    val heap = Wand.newHeap(k)
     val rows = rowsOf(present.distinct.map((field, _)))
     rows.groupBy(_.segmentId).toSeq.sortBy(_._1).foreach { case (seg, ps) =>
       val cursors = ps.sortBy(p => termOrder(p.term))
         .map(p => new Wand.TermCursor(p, weights(p.term), cache))
       Wand.wandSegment(seg, cursors, k, heap, del.getOrElse(seg, Array.empty[Int]))
     }
-    heap.iterator().asScala.toArray
-      .sortBy(h => (-h.score, h.segmentId, h.docId))
-      .take(k)
-      .map(h => Hit(h.segmentId, h.docId, h.score.toDouble))
+    heap.iterator().asScala.toArray.sorted(Searcher.HitRank).take(k)
   }
 }
 

@@ -2,9 +2,8 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.build.IndexBuilder
 import graft.codec.SmallFloat
-import graft.model.{PostingSlim, SkipRow}
+import graft.model.{Hit, SkipRow}
 import scala.jdk.CollectionConverters._
 
 /** Block-Max WAND top-k for pure-disjunction BM25 queries — the serving-path
@@ -87,16 +86,9 @@ object Wand {
     }
   }
 
-  final case class WandHit(segmentId: Int, docId: Int, score: Float)
-
-  /** rank order: score desc, then (segmentId, docId) asc — HitQueue.cs:78-88 */
-  private def better(a: WandHit, b: WandHit): Boolean =
-    a.score > b.score ||
-      (a.score == b.score && (a.segmentId < b.segmentId ||
-        (a.segmentId == b.segmentId && a.docId < b.docId)))
-
-  private[search] def heapComparator: java.util.Comparator[WandHit] =
-    (x: WandHit, y: WandHit) => if (better(x, y)) 1 else if (better(y, x)) -1 else 0
+  /** A top-k heap whose head is the worst hit kept ([[Searcher.HitRank]]). */
+  private[search] def newHeap(k: Int): java.util.PriorityQueue[Hit] =
+    new java.util.PriorityQueue[Hit](k + 1, Searcher.HitRank.reverse)
 
   /** Run BMW over one segment's term cursors, updating the shared heap.
     * `deleted` = sorted deleted docIds of THIS segment (liveDocs overlay) —
@@ -104,10 +96,10 @@ object Wand {
     * consults acceptDocs.
     */
   private[search] def wandSegment(segmentId: Int, cursors: Array[TermCursor], k: Int,
-                          heap: java.util.PriorityQueue[WandHit],
+                          heap: java.util.PriorityQueue[Hit],
                           deleted: Array[Int] = Array.empty): Unit = {
     cursors.foreach(_.next())
-    def theta: Float = if (heap.size < k) Float.NegativeInfinity else heap.peek().score
+    def theta: Double = if (heap.size < k) Double.NegativeInfinity else heap.peek().score
 
     var running = true
     while (running) {
@@ -153,9 +145,9 @@ object Wand {
           if (live) {
             var s = 0f
             cursors.foreach { c => if (!c.exhausted && c.doc == pivotDoc) s += c.score }
-            val hit = WandHit(segmentId, pivotDoc, s)
+            val hit = Hit(segmentId, pivotDoc, s.toDouble)
             if (heap.size < k) heap.add(hit)
-            else if (better(hit, heap.peek())) { heap.poll(); heap.add(hit) }
+            else if (Searcher.HitRank.lt(hit, heap.peek())) { heap.poll(); heap.add(hit) }
           }
           cursors.foreach { c => if (!c.exhausted && c.doc == pivotDoc) c.advance(pivotDoc + 1) }
         }
@@ -169,6 +161,10 @@ object Wand {
 
   /** Top-k OR-of-terms via BMW (LuceneFloat scoring; duplicate terms fold
     * into the clause weight — numerically identical to summed clauses).
+    * Runs the query when called: the per-task survivors are collected and
+    * finished on the driver ([[Searcher.topK]]). The weights, norm cache and
+    * term order ride the task closure; the delete overlay is the reader's
+    * own broadcast — a query creates no broadcast.
     */
   def searchOr(searcher: Searcher, spark: SparkSession, indexPath: String,
                field: String, terms: List[String], k: Int): DataFrame = {
@@ -176,30 +172,17 @@ object Wand {
     val statsFT = searcher.fieldTermStats(terms.toSet.map((t: String) => (field, t)))
     val stats: Map[String, (Long, Long)] = statsFT.map { case ((_, t), v) => t -> v }
     val present = terms.filter(stats.contains)
-    if (present.isEmpty) {
-      return spark.createDataset(Seq.empty[(String, Double, Int, Int)])
-        .toDF("url", "score", "segmentId", "docId")
-    }
+    if (present.isEmpty) return searcher.topK(Nil, k)
     val bm25 = searcher.bm25
     val maxDoc = searcher.maxDoc
-    val sttf = searcher.fieldSttf.getOrElse(field, 0L)
     val weights: Map[String, Float] = present.groupBy(identity).map { case (t, dup) =>
       t -> (bm25.idf(stats(t)._1, maxDoc) * (bm25.k1 + 1) * dup.size)
     }
-    val avgdl = bm25.avgFieldLength(sttf, maxDoc)
-    val cache: Array[Float] = {
-      val c = new Array[Float](256)
-      var j = 0
-      while (j < 256) { c(j) = bm25.k1 * ((1 - bm25.b) + bm25.b * bm25.normTable(j) / avgdl); j += 1 }
-      c
-    }
+    val cache = searcher.normCache(field)
     // clause order for float-sum determinism: sum scores in first-occurrence
     // order of the query terms, matching the DataFrame path's clause chain
     val termOrder: Map[String, Int] = present.distinct.zipWithIndex.toMap
-    val weightsB = spark.sparkContext.broadcast(weights)
-    val cacheB = spark.sparkContext.broadcast(cache)
-    val orderB = spark.sparkContext.broadcast(termOrder)
-    val deletedB = spark.sparkContext.broadcast(searcher.deletedDocs)
+    val deletedB = searcher.deletedB
 
     val partials = searcher.postingsRaw
       .filter(col("field") === field && col("term").isInCollection(weights.keySet))
@@ -207,23 +190,17 @@ object Wand {
       .as[WandRow]
       .repartition(col("segmentId"))
       .mapPartitions { rows =>
-        val heap = new java.util.PriorityQueue[WandHit](k + 1, heapComparator)
+        val heap = newHeap(k)
         val bySeg = rows.toArray.groupBy(_.segmentId)
         bySeg.toSeq.sortBy(_._1).foreach { case (seg, ps) =>
-          val cursors = ps.sortBy(p => orderB.value(p.term))
-            .map(p => new TermCursor(p, weightsB.value(p.term), cacheB.value))
+          val cursors = ps.sortBy(p => termOrder(p.term))
+            .map(p => new TermCursor(p, weights(p.term), cache))
           wandSegment(seg, cursors, k, heap,
             deletedB.value.getOrElse(seg, Array.empty[Int]))
         }
         heap.iterator().asScala
       }
 
-    val top = partials.collect()
-      .sortBy(h => (-h.score, h.segmentId, h.docId))
-      .take(k)
-    val topDs = spark.createDataset(top.toSeq)
-    broadcast(topDs).join(searcher.docs.select("segmentId", "docId", "url"), Seq("segmentId", "docId"))
-      .select(col("url"), col("score").cast("double").as("score"), col("segmentId"), col("docId"))
-      .orderBy(col("score").desc, col("segmentId").asc, col("docId").asc)
+    searcher.topK(partials.collect().toSeq, k)
   }
 }

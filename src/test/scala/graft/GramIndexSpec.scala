@@ -57,7 +57,7 @@ class GramIndexSpec extends AnyFunSuite {
   test("build writes a fresh gram table alongside the dictionary") {
     val g = spark.read.parquet(DictTable.gramsPath(base))
     assert(g.columns.sorted.toList == List("df", "field", "gram", "len", "pos", "term", "ttf"))
-    assert(DictTable.readGramsIfValid(spark, base).isDefined)
+    assert(DictTable.readGramsIfValid(spark, base, IndexBuilder.readStats(spark, base).toSeq).isDefined)
     assert(nGramRows > 100000, s"expected a large gram table, got $nGramRows")
   }
 

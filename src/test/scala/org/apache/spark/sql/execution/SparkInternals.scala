@@ -2,6 +2,7 @@ package org.apache.spark.sql.execution
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.BroadcastBlockId
 
 /** Spark-private state the specs observe. */
 object SparkInternals {
@@ -12,4 +13,14 @@ object SparkInternals {
 
   /** Number of persisted Datasets registered in the session's cache. */
   def cachedDatasets(spark: SparkSession): Int = spark.sharedState.cacheManager.numCachedEntries
+
+  /** The values of the broadcast variables the driver holds, by broadcast
+    * id (the driver keeps each value whole next to its pieces). */
+  def broadcastValues(sc: SparkContext): Map[Long, Any] = {
+    val bm = sc.env.blockManager
+    bm.getMatchingBlockIds(_.isBroadcast).collect {
+      case id @ BroadcastBlockId(bid, "") =>
+        bm.getLocalValues(id).flatMap(_.data.toList.headOption).map(bid -> _)
+    }.flatten.toMap
+  }
 }
