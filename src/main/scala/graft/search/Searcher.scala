@@ -141,6 +141,13 @@ object Searcher {
       else Integer.compare(a.docId, b.docId)
   }
 
+  /** Cumulative driver-side point reads of one reader ([[Searcher.pointReads]]):
+    * files opened to read row groups, row groups read, row groups pruned by
+    * footer statistics, dictionary pages or the column index, and rows that
+    * passed the exact re-check. */
+  final case class PointReads(filesOpened: Long, rowGroupsRead: Long,
+                              rowGroupsSkipped: Long, rowsReturned: Long)
+
   /** Schema of every top-k result. */
   val TopKSchema: StructType =
     StructType.fromDDL("url STRING, score DOUBLE NOT NULL, segmentId INT NOT NULL, docId INT NOT NULL")
@@ -337,8 +344,10 @@ final class Searcher(spark: SparkSession, indexPath: String,
     */
   @transient lazy val liveSegments: Set[Int] = statsRows.map(_.segmentId).toSet
 
+  /** Read with its known schema, so resolving it starts no job; the
+    * payload and offset columns read as null where a file lacks them. */
   @transient lazy val postingsRaw: DataFrame =
-    spark.read.parquet(IndexBuilder.postingsPath(indexPath))
+    IndexBuilder.readPostings(spark, indexPath)
       .filter(col("segmentId").isInCollection(liveSegments))
 
   @transient lazy val postings: Dataset[PostingRow] =
@@ -352,9 +361,20 @@ final class Searcher(spark: SparkSession, indexPath: String,
     postingsRaw.select("segmentId", "field", "term", "df", "docDeltas", "tfs", "lens")
       .as[PostingSlim]
 
+  /** Read with its known schema (with `sortKey` when config.json names an
+    * index sort), so resolving it starts no job. */
   @transient lazy val docs: DataFrame =
-    spark.read.parquet(IndexBuilder.docsPath(indexPath))
+    IndexBuilder.readDocs(spark, indexPath, sorted = cfg.indexSort.isDefined)
       .filter(col("segmentId").isInCollection(liveSegments))
+
+  /** Driver-side Parquet point reads of this reader's tables: the fresh
+    * dictionary's term stats, the winners' urls and the small delete
+    * overlay, each with no Spark job ([[PointReader]]). */
+  @transient private lazy val points =
+    new PointReader(new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration))
+
+  /** This reader's point-read counters so far. */
+  def pointReads: Searcher.PointReads = points.counters
 
   /** Term-vector table (TermVectors.scala — the .tvd/.tvf analog), live
     * segments only. Throws if the index was built without vectors, like
@@ -461,9 +481,29 @@ final class Searcher(spark: SparkSession, indexPath: String,
     if (sttf <= 0) 1d else sttf.toDouble / maxDoc
   }
 
-  /** Distinct delete markers, resolved once per reader (one tiny count). */
-  @transient lazy val deletedCount: Long =
-    graft.build.Deletes.count(spark, indexPath)
+  /** (distinct delete markers, the live segments' sorted deleted docIds),
+    * resolved once per reader. Marker files holding at most
+    * [[deleteBroadcastLimit]] rows by their footers are read once on the
+    * driver and deduped there, with no job; a larger table is counted by a
+    * distributed distinct, and collected per segment only if that count is
+    * within the limit. */
+  @transient private lazy val overlay: (Long, Map[Int, Array[Int]]) = {
+    val dir = graft.build.Deletes.deletesPath(indexPath)
+    if (!graft.build.Deletes.exists(spark, indexPath)) (0L, Map.empty)
+    else if (points.rowTotal(dir) <= deleteBroadcastLimit) {
+      val markers = points.read(dir, Seq("segmentId", "docId"), _ => None)(_ => true)
+        .map(r => (r(0).asInstanceOf[Int], r(1).asInstanceOf[Int])).distinct
+      (markers.size.toLong, markers.filter(m => liveSegments(m._1)).groupBy(_._1)
+        .map { case (seg, ms) => seg -> ms.map(_._2).sorted.toArray })
+    } else {
+      val n = graft.build.Deletes.count(spark, indexPath)
+      (n, if (n == 0 || n > deleteBroadcastLimit) Map.empty
+          else graft.build.Deletes.deletedDocIds(spark, indexPath, Some(liveSegments)))
+    }
+  }
+
+  /** Distinct delete markers. */
+  @transient lazy val deletedCount: Long = overlay._1
 
   /** true -> the overlay exceeds [[deleteBroadcastLimit]]: it is NOT
     * collected to the driver; live-docs filtering runs as a distributed
@@ -478,9 +518,7 @@ final class Searcher(spark: SparkSession, indexPath: String,
     * vanish from all matches immediately; collection stats stay
     * un-decremented until a merge purges them.
     */
-  @transient lazy val deletedDocs: Map[Int, Array[Int]] =
-    if (deletedCount == 0 || largeDeletes) Map.empty
-    else graft.build.Deletes.deletedDocIds(spark, indexPath, Some(liveSegments))
+  @transient lazy val deletedDocs: Map[Int, Array[Int]] = overlay._2
 
   @transient private[search] lazy val deletedB =
     spark.sparkContext.broadcast(deletedDocs)
@@ -511,9 +549,11 @@ final class Searcher(spark: SparkSession, indexPath: String,
       .limit(1).count() > 0
 
   /** Fresh global dictionary (BlockTree/.tip analog, (field, term) keyed)
-    * resolved once per reader; None -> per-query postings-scan fallback. NOT
-    * cached: at web scale the dictionary is hundreds of GB, and every use
-    * filters it down to a handful of terms first (Parquet min/max prunes). */
+    * resolved once per reader, for the term-expansion scans; None ->
+    * per-query postings-scan fallback. Term stats read its files directly
+    * ([[dictStats]]). NOT cached: at web scale the dictionary is hundreds of
+    * GB, and every use filters it down to a handful of terms first (Parquet
+    * min/max prunes). */
   @transient lazy val dictTable: Option[DataFrame] =
     graft.build.DictTable.readIfValid(spark, indexPath, statsRows.toSeq)
 
@@ -572,17 +612,18 @@ final class Searcher(spark: SparkSession, indexPath: String,
   @transient lazy val gramsTable: Option[DataFrame] =
     graft.build.DictTable.readGramsIfValid(spark, indexPath, statsRows.toSeq)
 
-  /** Cross-segment (field, term) stats (TermContext.Build analog,
-    * Index/TermContext.cs:90): one tiny pruned aggregate, collected to the
-    * driver, folded into constants.
-    */
   private[search] def session: SparkSession = spark
 
-  /** Per-reader (field, term) -> (df, ttf) memo — the TermContext cache a
+  /** Cross-segment (field, term) stats (TermContext.Build analog,
+    * Index/TermContext.cs:90): a driver-side point read of the fresh
+    * dictionary, or one pruned postings aggregate while it is stale, folded
+    * into constants.
+    *
+    * Per-reader (field, term) -> (df, ttf) memo — the TermContext cache a
     * reader keeps for its open snapshot: df/ttf are build-time constants of
     * the segment set this Searcher resolved at open (deletes do not change
     * docFreq until a purging merge, exactly the reference semantics), so a
-    * repeated term costs ZERO Spark jobs after its first lookup. `None`
+    * repeated term reads nothing after its first lookup. `None`
     * records ABSENT terms too (a miss is as cacheable as a hit). Insertion
     * stops at [[Searcher.TermStatsCacheMax]] entries — a hard bound, also
     * under concurrent queries — so an adversarial expansion stream cannot
@@ -608,27 +649,45 @@ final class Searcher(spark: SparkSession, indexPath: String,
     }.toMap
   }
 
+  /** Whether the dictionary is fresh for this reader's segment set and has
+    * data files: term stats then come from point reads of it. */
+  @transient private lazy val dictFresh: Boolean =
+    graft.build.DictTable.readMarker(spark, indexPath)
+      .contains(graft.build.DictTable.segsSignatureOf(statsRows.toSeq)) &&
+      points.nonEmpty(graft.build.DictTable.dictPath(indexPath))
+
   private def fetchFieldTermStats(keys: Set[(String, String)]): Map[(String, String), (Long, Long)] = {
     if (keys.isEmpty) return Map.empty
-    val byField = keys.groupBy(_._1)
-    def pred(src: DataFrame): Column =
-      byField.map { case (f, ks) =>
+    if (dictFresh)
+      try return dictStats(keys)
+      catch { case _: java.io.FileNotFoundException => () } // a refresh replaced the listed files
+    // stale dictionary: aggregate the live segments' postings rows
+    postingsRaw
+      .select("field", "term", "df", "ttf")
+      .filter(keys.groupBy(_._1).map { case (f, ks) =>
         col("field") === f && col("term").isInCollection(ks.map(_._2))
-      }.reduce(_ || _)
-    dictTable match {
-      case Some(dict) =>
-        dict.filter(pred(dict))
-          .select("field", "term", "df", "ttf")
-          .as[(String, String, Long, Long)].collect()
-          .map { case (f, t, df, ttf) => (f, t) -> (df, ttf) }.toMap
-      case None =>
-        postingsRaw
-          .select("field", "term", "df", "ttf")
-          .filter(pred(postingsRaw))
-          .groupBy("field", "term").agg(sum("df").as("df"), sum("ttf").as("ttf"))
-          .as[(String, String, Long, Long)].collect()
-          .map { case (f, t, df, ttf) => (f, t) -> (df, ttf) }.toMap
-    }
+      }.reduce(_ || _))
+      .groupBy("field", "term").agg(sum("df").as("df"), sum("ttf").as("ttf"))
+      .as[(String, String, Long, Long)].collect()
+      .map { case (f, t, df, ttf) => (f, t) -> (df, ttf) }.toMap
+  }
+
+  /** (df, ttf) of exactly `keys` from the fresh dictionary: a point read
+    * pushing down each field's terms and, where the file has the column,
+    * their code-point lengths (the dictionary is sorted by (field, len,
+    * term), so `len` is what prunes its row groups). */
+  private def dictStats(keys: Set[(String, String)]): Map[(String, String), (Long, Long)] = {
+    val byField = keys.groupBy(_._1).map { case (f, ks) => f -> ks.map(_._2) }
+    points.read(graft.build.DictTable.dictPath(indexPath), Seq("field", "term", "df", "ttf"), { schema =>
+      val withLen = PointReader.isInt32(schema, "len")
+      Some(byField.map { case (f, ts) =>
+        val p = PointReader.binaryIn("field", Seq(f)).and(PointReader.binaryIn("term", ts))
+        if (!withLen) p
+        else p.and(PointReader.intIn("len", ts.map(t => t.codePointCount(0, t.length))))
+      }.reduce(_ or _))
+    })(r => keys.contains((r(0).asInstanceOf[String], r(1).asInstanceOf[String])))
+      .map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[String]) ->
+        (r(2).asInstanceOf[Number].longValue, r(3).asInstanceOf[Number].longValue)).toMap
   }
 
   /** Default-field term stats (back-compat convenience). */
@@ -1464,19 +1523,21 @@ final class Searcher(spark: SparkSession, indexPath: String,
 
   /** The finisher of every top-k entry point — TopDocs.Merge, then the
     * stored fields of just the winners: rank `hits` on the driver
-    * ([[Searcher.HitRank]]), keep the first k, read their urls with one
-    * segment-pruned, docId-filtered scan of `docs`, and return them in rank
-    * order as a local DataFrame of [[Searcher.TopKSchema]] — collecting it
-    * starts no job. `hits` are per-partition survivors (at most k each), so
-    * the driver holds at most k × partitions hits. */
+    * ([[Searcher.HitRank]]), keep the first k, point-read their urls from
+    * their segments' `docs` files, and return them in rank order as a local
+    * DataFrame of [[Searcher.TopKSchema]] — neither the read nor collecting
+    * the result starts a job. `hits` are per-partition survivors (at most k
+    * each), so the driver holds at most k × partitions hits. */
   private[search] def topK(hits: Seq[Hit], k: Int): DataFrame = {
     val winners = hits.sorted(Searcher.HitRank).take(k)
     val urls: Map[(Int, Int), String] =
-      if (winners.isEmpty) Map.empty
-      else docs.filter(col("segmentId").isInCollection(winners.map(_.segmentId).distinct) &&
-          col("docId").isInCollection(winners.map(_.docId).distinct))
-        .select("segmentId", "docId", "url").collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> r.getString(2)).toMap
+      winners.filter(h => liveSegments(h.segmentId)).groupBy(_.segmentId).iterator.flatMap {
+        case (seg, hs) =>
+          val ids = hs.map(_.docId).toSet
+          points.read(s"${IndexBuilder.docsPath(indexPath)}/segmentId=$seg", Seq("docId", "url"),
+              _ => Some(PointReader.intIn("docId", ids)))(r => ids(r(0).asInstanceOf[Int]))
+            .map(r => (seg, r(0).asInstanceOf[Int]) -> r(1).asInstanceOf[String])
+      }.toMap
     val rows = winners.flatMap(h => urls.get((h.segmentId, h.docId))
       .map(url => Row(url, h.score, h.segmentId, h.docId)))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), Searcher.TopKSchema)
@@ -1665,9 +1726,10 @@ final class Searcher(spark: SparkSession, indexPath: String,
       .flatMap(r => graft.build.DictTable.positionalBigrams(r).map(_._1)).distinct
     if (required.isEmpty) None
     else gramsTable.map { g =>
+      // the distinct grams as a set: one shuffle, where countDistinct plans two
       g.filter(col("field") === field && col("gram").isInCollection(required))
         .groupBy("term", "df", "ttf")
-        .agg(countDistinct(col("gram")).as("ng"))
+        .agg(size(collect_set(col("gram"))).as("ng"))
         .filter(col("ng") === required.length)
         .select("term", "df", "ttf")
     }

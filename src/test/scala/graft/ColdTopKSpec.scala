@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.SparkInternals
 import org.apache.spark.sql.functions._
@@ -9,7 +8,6 @@ import graft.build.{Deletes, IndexBuilder, PagesGen}
 import graft.model.Hit
 import graft.search._
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** Every top-k entry point finishes on the driver: the k winners' urls come
   * from one pruned read of `docs` and the result is a local DataFrame. The
@@ -49,19 +47,7 @@ class ColdTopKSpec extends AnyFunSuite {
   private val prefixQ = ConstantScoreQ(PrefixQ("wc"), 1f)
   private val missingQ = TermQ("zzzmissing")
 
-  /** Spark jobs started by `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    SparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; SparkInternals.drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
-  }
+  private def jobsOf(body: => Unit): Int = SparkInternals.jobsOf(spark.sparkContext)(body)
 
   private val rank = Seq(col("score").desc, col("segmentId").asc, col("docId").asc)
 
@@ -124,11 +110,10 @@ class ColdTopKSpec extends AnyFunSuite {
     }
   }
 
-  test("a fresh reader opens in 3 jobs; a cold top-k runs in 4, its repeat in 3") {
+  test("a fresh reader opens in 3 jobs; a cold top-k runs in 2, its repeat in 2") {
     var s: Searcher = null
     val open = jobsOf { s = new Searcher(spark, clean); s.dictTable; s.gramsTable }
-    // the first query of a reader also resolves the postings and docs
-    // tables, one footer-inference job each, once per reader
+    // the postings and docs tables resolve with their known schemas
     val tables = jobsOf { s.postingsRaw; s.docs }
     val term = jobsOf(s.search(termQ, 10).collect())
     val repeat = jobsOf(s.search(termQ, 10).collect())
@@ -138,10 +123,22 @@ class ColdTopKSpec extends AnyFunSuite {
       "phrase" -> (() => s.search(phraseQ, 10)),
       "prefix" -> (() => s.search(prefixQ, 10))).map { case (n, run) => n -> jobsOf(run().collect()) }
     assert(open <= 3, s"open ran $open jobs")
-    assert(tables <= 2, s"resolving postings and docs ran $tables jobs")
-    assert(term <= 4, s"cold term ran $term jobs")
-    assert(repeat <= 3, s"repeat term ran $repeat jobs")
-    others.foreach { case (n, j) => assert(j <= 4, s"cold $n ran $j jobs") }
+    assert(tables == 0, s"resolving postings and docs ran $tables jobs")
+    // the term stats and the winners' urls are driver-side point reads: a
+    // cold top-k is its scoring query; a prefix also expands its terms
+    assert(term <= 2, s"cold term ran $term jobs")
+    assert(repeat <= 2, s"repeat term ran $repeat jobs")
+    others.foreach { case (n, j) => assert(j <= (if (n == "prefix") 3 else 2), s"cold $n ran $j jobs") }
+  }
+
+  test("a small delete overlay loads with no job and equals the marker table's") {
+    val s = new Searcher(spark, deleted)
+    s.maxDoc // opens the reader: one stats read
+    assert(jobsOf { s.deletedCount; s.deletedDocs } == 0)
+    assert(s.deletedCount == Deletes.count(spark, deleted) && s.deletedCount > 0)
+    val want = Deletes.deletedDocIds(spark, deleted, Some(Set(0, 1, 2, 3)))
+    assert(s.deletedDocs.keySet == want.keySet &&
+      want.forall { case (seg, a) => s.deletedDocs(seg).toSeq == a.toSeq })
   }
 
   test("collecting a top-k result starts no job") {

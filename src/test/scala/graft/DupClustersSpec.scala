@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SparkInternals
 import graft.pipeline.{Dedup, PipelineMetrics}
 
 /** Duplicate clustering (connected components of the dup-pair graph, each
@@ -92,22 +93,14 @@ class DupClustersSpec extends AnyFunSuite {
     for (dist <- BothPaths) assert(clusters(pairs, dist) == want)
   }
 
-  /** (jobs, Σ task result bytes) of `body`. */
-  private def jobsAndResultBytes(body: => Unit): (Int, Long) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+  /** Σ task result bytes of `body`. */
+  private def resultBytes(body: => Unit): Long = {
     val bytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    SparkInternals.observe(spark.sparkContext, new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.resultSize)
-    }
-    org.apache.spark.sql.execution.SparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.sql.execution.SparkInternals.drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    (jobs.get, bytes.get)
+    })(body)
+    bytes.get
   }
 
   test("the edge set is sized before any edge row reaches the driver") {
@@ -118,7 +111,7 @@ class DupClustersSpec extends AnyFunSuite {
     val star = Seq.fill(20000)((0L, 1L + (rnd.nextLong() >>> 2))).toDF("ida", "idb")
       .localCheckpoint() // a distributed input, as pairs come from nearDupPairs
     // within the default budget: count, then collect
-    val (jobs, _) = jobsAndResultBytes(Dedup.dupClusters(star))
+    val jobs = SparkInternals.jobsOf(spark.sparkContext)(Dedup.dupClusters(star))
     assert(PipelineMetrics.lastClusters == PipelineMetrics.ClusterStats(0, inMemory = true))
     assert(jobs <= 2, s"$jobs jobs")
     // above a 10,000-row budget (24 bytes a row): only the count is shipped.
@@ -126,8 +119,8 @@ class DupClustersSpec extends AnyFunSuite {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, (24 * 10000).toString)
-    val (_, bytes) =
-      try jobsAndResultBytes(Dedup.dupClusters(star))
+    val bytes =
+      try resultBytes(Dedup.dupClusters(star))
       finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     assert(PipelineMetrics.lastClusters == PipelineMetrics.ClusterStats(0, inMemory = false))
     assert(bytes < 80000, s"$bytes task result bytes")

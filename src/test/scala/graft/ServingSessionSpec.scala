@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SparkInternals
 import graft.search._
 
 /** ServingSession: warm in-session term/bool/WAND top-k must equal the
@@ -117,31 +118,17 @@ class ServingSessionSpec extends AnyFunSuite {
 
   test("warm fuzzy runs ZERO Spark jobs once dict and expansions are pinned") {
     session.fuzzyTopK(se.defaultField, "datq", 2, 50, 10) // pins dict + expansions
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = SparkInternals.jobsOf(spark.sparkContext) {
       session.fuzzyTopK(se.defaultField, "datq", 2, 50, 10)
-      Thread.sleep(200)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(jobs == 0, s"warm fuzzy scheduled $jobs Spark jobs")
   }
 
   test("warm prefix runs ZERO Spark jobs once dict and expansions are pinned") {
     session.prefixTopK(se.defaultField, "dat", 10) // pins dict + expansions
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = SparkInternals.jobsOf(spark.sparkContext) {
       session.prefixTopK(se.defaultField, "dat", 10)
-      Thread.sleep(200)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(jobs == 0, s"warm prefix scheduled $jobs Spark jobs")
   }
 
@@ -153,19 +140,12 @@ class ServingSessionSpec extends AnyFunSuite {
     session.boolTopK(List((Occur.Must, se.defaultField, "data"),
       (Occur.Must, se.defaultField, "search")), 0, 10)
     session.phraseTopK(se.defaultField, List("hash" -> 0, "join" -> 1), 10)
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = SparkInternals.jobsOf(spark.sparkContext) {
       session.termTopK(se.defaultField, "data", 10)
       session.boolTopK(List((Occur.Must, se.defaultField, "data"),
         (Occur.Must, se.defaultField, "search")), 0, 10)
       session.phraseTopK(se.defaultField, List("hash" -> 0, "join" -> 1), 10)
-      Thread.sleep(200) // let any async job-start events land
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     assert(jobs == 0, s"warm path scheduled $jobs Spark jobs")
   }
 

@@ -1,14 +1,12 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.SparkInternals
 import org.apache.spark.sql.functions._
 import graft.build.{Deletes, DictTable, IndexBuilder, PagesGen}
 import graft.merge.MergeJob
 import graft.streaming.StreamingIndexer
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The dictionary of a split follows the carry-or-rebuild rule: a split that
   * drops no live doc from a source whose dictionary is fresh copies it; one
@@ -24,19 +22,7 @@ class SplitDictSpec extends AnyFunSuite {
   private lazy val pages = PagesGen.local(N)
   private def df(ps: Seq[(String, String)]) = spark.createDataFrame(ps).toDF("url", "text")
 
-  /** Spark jobs started by `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    SparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try { body; SparkInternals.drainListenerBus(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
-  }
+  private def jobsOf(body: => Unit): Int = SparkInternals.jobsOf(spark.sparkContext)(body)
 
   /** (jobs of a 4-segment build, jobs of its 8-way split). */
   private lazy val jobs = {
